@@ -250,13 +250,11 @@ def media_dup_pairs(media: DataFrame, max_hamming: int = 6,
     statistics collide). At 100 TB, tune ``n_bands`` per the recall/
     collision trade documented on ``banded_hamming_pairs``.
 
-    Release contract: ``banded_hamming_pairs`` persists the fingerprint
-    table into the dedup module's tracked cache (both join sides would
-    otherwise recompute the ``perceptual_hash`` mapInPandas pass); a
-    long-lived caller must release it afterwards via
-    ``operators.dedup.unpersist_shingles()`` (or bracket the call with
-    ``shingle_cache_snapshot``/``new_shingles_since`` to release only
-    this operator's frames)."""
+    Release contract: ``banded_hamming_pairs`` stages the fingerprint
+    table (both join sides would otherwise recompute the
+    ``perceptual_hash`` mapInPandas pass); a long-lived caller runs the
+    call and its terminal action inside ``operators.staging.scope()``,
+    which releases it."""
     from ..operators.dedup import banded_hamming_pairs
 
     fp = perceptual_hash(media, codec=codec)

@@ -612,16 +612,15 @@ def semdedup(corpus: DataFrame, threshold: float = 0.95,
     unit = _unit(clean, "__v")
     # assign feeds FIVE consumers (both pair-join sides, the CC node
     # frame, meta, the election) — stage it once or each replays the
-    # corpus×centroids crossJoin + shuffle. A LAZY tracked persist
+    # corpus×centroids crossJoin + shuffle. A LAZY staged persist
     # (r11, was an eager localCheckpoint): no lineage truncation is
     # needed here (the plan above is two narrow steps + one shuffle),
     # and the eager checkpoint cost a dedicated driver job round —
     # under AQE several scheduled jobs — per call before any consumer
     # ran; the cache now fills inside the first consuming job.
-    # Released with the dedup shingle caches (unpersist_shingles).
-    from .dedup import persist_tracked
+    from .staging import stage
 
-    assign = persist_tracked(
+    assign = stage(
         unit.crossJoin(F.broadcast(cents))
         .groupBy(id_col)
         .agg(_best_centroid(dot(F.col("__v"), F.col("centroid_vec"))),

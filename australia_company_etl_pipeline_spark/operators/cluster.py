@@ -25,20 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import ann
+from .staging import stage
 from .textstats import tokens
 
-# persisted (class, term) aggregates awaiting release — the
-# dedup._SHINGLE_CACHE / retrieval._POSTINGS_CACHE contract.
-_CLUSTER_CACHE: list[DataFrame] = []
-
-
-def unpersist_cluster() -> int:
-    """Release frames persisted by ``ctfidf_terms(persist=True)`` in
-    this process; returns how many were released."""
-    n = len(_CLUSTER_CACHE)
-    while _CLUSTER_CACHE:
-        _CLUSTER_CACHE.pop().unpersist()
-    return n
+# Only an alias: the benchmark harness (perfbench/harness.py) imports it.
+from .staging import release as unpersist_cluster  # noqa: F401
 
 
 def ctfidf_terms(docs: DataFrame, class_col: str, text_col: str = "text",
@@ -60,7 +51,8 @@ def ctfidf_terms(docs: DataFrame, class_col: str, text_col: str = "text",
     its three consumers (class totals, corpus term totals, scoring)
     each REPLAN the corpus explode under it — four scans for one
     logical pass. Pass ``persist=True`` when the corpus scan isn't
-    free (always, at scale) and release with ``unpersist_cluster()``.
+    free (always, at scale); it is staged and released with the
+    caller's staging scope (``operators/staging.py``).
     """
     toks = (docs.filter(F.col(class_col).isNotNull())
             .select(class_col, F.explode(tokens(F.col(text_col)))
@@ -68,10 +60,7 @@ def ctfidf_terms(docs: DataFrame, class_col: str, text_col: str = "text",
     tf = (toks.groupBy(class_col, "term")
           .agg(F.count(F.lit(1)).alias("tf")))
     if persist:
-        from pyspark import StorageLevel
-
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-        _CLUSTER_CACHE.append(tf)
+        tf = stage(tf)
     # everything below derives from the (class, term) aggregate —
     # one pass over the corpus when persisted
     class_tot = tf.groupBy(class_col).agg(F.sum("tf").alias("__wc"))

@@ -25,66 +25,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .staging import scope, stage
+
+# Only an alias: the benchmark harness (perfbench/harness.py) imports it.
+from .staging import release as unpersist_shingles  # noqa: F401
+
 HASH_PRIME = 1_000_000_007
-
-# Shingle frames persisted by minhash_dup_pairs / cross_corpus_dup_pairs.
-# They must outlive the returned (lazy) DataFrame's actions, so the
-# operators cannot unpersist eagerly; callers release them after their
-# terminal action via unpersist_shingles(). dedup_clusters does this
-# automatically (its CC loop materializes the pair set internally).
-_SHINGLE_CACHE: list[DataFrame] = []
-
-
-def unpersist_shingles() -> int:
-    """Release every shingle frame persisted by the MinHash operators in
-    this process; returns how many were unpersisted. Call after the
-    terminal action on the returned pairs (safe any time — Spark
-    recomputes if a frame is re-used after release)."""
-    n = 0
-    while _SHINGLE_CACHE:
-        _SHINGLE_CACHE.pop().unpersist()
-        n += 1
-    return n
-
-
-def persist_tracked(df: DataFrame, storage_level=None) -> DataFrame:
-    """Persist an auxiliary multi-consumer frame (a derived corpus, a
-    bounded candidate-pair set an eval references again) and track it
-    for ``unpersist_shingles()`` — the shingle build's release
-    contract, for plans staging their own shared frames. An UNcached
-    frame referenced twice replans its whole subtree twice; for an
-    all-pairs baseline that is two quadratic joins.
-
-    ``storage_level``: StorageLevel or name; default MEMORY_AND_DISK —
-    at 100 TB a corpus-sized staged frame wants ``"DISK_ONLY"`` (see
-    ``operators/staging.py`` for the policy and the process-wide
-    override)."""
-    from .staging import resolve_level
-
-    out = df.persist(resolve_level(storage_level))
-    _SHINGLE_CACHE.append(out)
-    return out
-
-
-def shingle_cache_snapshot() -> set[int]:
-    """Mark the current cache contents; pair with ``new_shingles_since``
-    to scope cleanup to ONE operator call (a global
-    ``unpersist_shingles`` would also evict frames owned by unrelated
-    callers)."""
-    return {id(f) for f in _SHINGLE_CACHE}
-
-
-def new_shingles_since(snapshot: set[int],
-                       remove: bool = True) -> list[DataFrame]:
-    """Frames the cache gained since ``snapshot``; with ``remove`` they
-    leave the module cache, transferring unpersist responsibility to the
-    caller (how ``prepare_training_corpus`` re-homes its
-    decontamination shingles into its own stage cache)."""
-    fresh = [f for f in _SHINGLE_CACHE if id(f) not in snapshot]
-    if remove:
-        for f in fresh:
-            _SHINGLE_CACHE.remove(f)
-    return fresh
 
 
 def content_key(cols: list[Column]) -> Column:
@@ -506,8 +452,8 @@ def token_frame(df: DataFrame, text_col: str, id_col: str,
     corpus stage it once and pass it to ``shingle_frame(tokens_df=)`` /
     ``simhash_table(tokens_df=)``: each family then reads the cached
     arrays instead of re-scanning the source and re-splitting the text.
-    Persisted (memory-and-disk) and tracked for
-    ``unpersist_shingles()`` unless ``persist=False``.
+    Staged (``staging.stage``, released with the caller's staging
+    scope) unless ``persist=False``.
 
     Recompute-vs-cache: worth it when the SCAN is expensive (remote
     object store, wide rows you'd prune). On a cheap local scan the
@@ -519,13 +465,10 @@ def token_frame(df: DataFrame, text_col: str, id_col: str,
     ``storage_level``: default MEMORY_AND_DISK; a token frame is the
     same order as the corpus itself, so at 100 TB pass ``"DISK_ONLY"``
     (policy in ``operators/staging.py``)."""
-    from .staging import resolve_level
-
     tf = df.select(F.col(id_col),
                    tokens(F.col(text_col)).alias("__toks"))
     if persist:
-        tf = tf.persist(resolve_level(storage_level))
-        _SHINGLE_CACHE.append(tf)
+        tf = stage(tf, storage_level)
     return tf
 
 
@@ -537,12 +480,10 @@ def shingle_frame(df: DataFrame, text_col: str, id_col: str,
     second-biggest near-dup cost, so callers running several sketch
     families over one corpus build this ONCE and pass it to each
     operator. Derives from a staged ``token_frame`` when ``tokens_df``
-    is given (no re-scan, no re-split). Persisted and tracked for
-    ``unpersist_shingles()`` unless ``persist=False``; ``storage_level``
+    is given (no re-scan, no re-split). Staged (released with the
+    caller's staging scope) unless ``persist=False``; ``storage_level``
     defaults to MEMORY_AND_DISK — corpus-sized at any scale, so at
     100 TB pass ``"DISK_ONLY"`` (``operators/staging.py``)."""
-    from .staging import resolve_level
-
     if tokens_df is not None:
         sh = tokens_df.select(
             F.col(id_col),
@@ -551,8 +492,7 @@ def shingle_frame(df: DataFrame, text_col: str, id_col: str,
         sh = df.select(F.col(id_col),
                        word_ngrams(F.col(text_col), shingle).alias("__sh"))
     if persist:
-        sh = sh.persist(resolve_level(storage_level))
-        _SHINGLE_CACHE.append(sh)
+        sh = stage(sh, storage_level)
     return sh
 
 
@@ -574,10 +514,12 @@ def minhash_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     verify join, so it is persisted (memory-and-disk, evicted LRU) and
     computed once per corpus instead of twice — tokenize+shingle is the
     second-biggest cost after signatures. The cache must outlive this
-    (lazy) result's actions; call ``unpersist_shingles()`` once done to
-    release it instead of waiting for LRU eviction. Pass a pre-built
-    ``shingles`` frame (see ``shingle_frame``) to share the projection
-    with other sketch families over the same corpus.
+    (lazy) result's actions, so it is staged: run the build and the
+    terminal action inside ``staging.scope()`` (or call
+    ``staging.release()`` once done) instead of waiting for LRU
+    eviction. Pass a pre-built ``shingles`` frame (see
+    ``shingle_frame``) to share the projection with other sketch
+    families over the same corpus.
     """
     sh = (shingles if shingles is not None
           else shingle_frame(df, text_col, id_col, shingle))
@@ -649,20 +591,19 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     # edges and the initial labels are loop INPUTS, not loop-carried
     # state: their lineage is shallow and never grows, so they need
     # staging (every iteration re-reads them), not truncation. Lazy
-    # tracked persists (r11, were eager localCheckpoints) fill inside
+    # staged persists (r11, were eager localCheckpoints) fill inside
     # iteration 1's first job instead of costing two dedicated driver
     # job rounds up front; only the loop-carried ``jumped`` below keeps
     # the eager localCheckpoint that the flat-lineage contract needs.
     half = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = persist_tracked(
+    edges = stage(
         half.unionByName(half.select(F.col("dst").alias("src"),
                                      F.col("src").alias("dst"))).distinct())
     if nodes is not None:
         ids = nodes.select(F.col(node_col).alias("id")).distinct()
     else:
         ids = edges.select(F.col("src").alias("id")).distinct()
-    labels = persist_tracked(ids.select("id",
-                                        F.col("id").alias("cluster_id")))
+    labels = stage(ids.select("id", F.col("id").alias("cluster_id")))
     converged = False
     for i in range(max_iter):
         nbr_min = (edges.join(labels, edges["dst"] == labels["id"])
@@ -715,35 +656,30 @@ def dedup_clusters(df: DataFrame, text_col: str, id_col: str,
     or 'ngram' (the quadratic exact baseline, guarded). ``checkpoint``
     forwards to ``connected_components`` ('reliable' for preemptible
     clusters)."""
-    before = shingle_cache_snapshot()
-    if method == "minhash":
-        pairs = minhash_dup_pairs(df, text_col, id_col, threshold, **kwargs)
-    elif method == "ngram":
-        pairs = ngram_jaccard_pairs(df, text_col, id_col,
-                                    threshold=threshold, **kwargs)
-    elif method == "prefix":
-        # exact pairs WITHOUT the quadratic baseline's cost: the
-        # prefix-filtered similarity join (identical output to 'ngram',
-        # candidates proportional to similar pairs — the exact-clusters
-        # form that survives corpus scale)
-        sh = shingle_frame(df, text_col, id_col,
-                           kwargs.pop("shingle", 3))
-        pairs = jaccard_similarity_join(sh, id_col, threshold=threshold,
-                                        **kwargs)
-    else:
-        raise ValueError(f"unknown method {method!r}")
-    try:
-        # CC materializes the edge set eagerly in its first step, so the
-        # pair plan (and its persisted shingles) is fully consumed here
+    # A scope of its own: CC materializes the edge set eagerly in its
+    # first step, so the pair plan (and the shingles staged for it) is
+    # fully consumed inside it. A caller-staged ``shingles=`` frame
+    # belongs to the caller's scope and survives.
+    with scope():
+        if method == "minhash":
+            pairs = minhash_dup_pairs(df, text_col, id_col, threshold,
+                                      **kwargs)
+        elif method == "ngram":
+            pairs = ngram_jaccard_pairs(df, text_col, id_col,
+                                        threshold=threshold, **kwargs)
+        elif method == "prefix":
+            # exact pairs WITHOUT the quadratic baseline's cost: the
+            # prefix-filtered similarity join (identical output to
+            # 'ngram', candidates proportional to similar pairs — the
+            # exact-clusters form that survives corpus scale)
+            sh = shingle_frame(df, text_col, id_col,
+                               kwargs.pop("shingle", 3))
+            pairs = jaccard_similarity_join(sh, id_col,
+                                            threshold=threshold, **kwargs)
+        else:
+            raise ValueError(f"unknown method {method!r}")
         cc = connected_components(pairs, nodes=df.select(id_col),
                                   node_col=id_col, checkpoint=checkpoint)
-    finally:
-        # Release ONLY the shingle frames THIS call created — a global
-        # unpersist_shingles() here would also evict a caller-shared
-        # shingles= frame (the hashed_dup_pairs pattern) and any other
-        # operator's cached frames, forcing silent recomputes.
-        for f in new_shingles_since(before):
-            f.unpersist()
     return cc.select(F.col("id").alias(id_col), "cluster_id",
                      (F.col("id") == F.col("cluster_id"))
                      .alias("is_canonical"))
@@ -927,21 +863,20 @@ def banded_hamming_pairs(fp: DataFrame, id_col: str,
     sf0.1: the registered ngram simhash branch dropped 10.4s → 4.9s
     when the fp table stopped computing twice). The cached frame is one
     (id, int64) row per document — tiny at any corpus scale — and is
-    tracked for ``unpersist_shingles()``. At 100 TB the same persist is
+    staged in the caller's staging scope. At 100 TB the same persist is
     still right: recomputing the corpus-wide vote aggregate per join
     side is a second full I/O+shuffle pass, while the fp cache is
     ~16 bytes/doc.
 
     The persist is SKIPPED when the caller already staged ``fp`` (its
     storage level has memory or disk set) — a second persist attempt on
-    an already-cached frame is redundant and would double-register it
-    in the release tracker. Non-dedup callers (e.g. the multimodal
-    perceptual-hash path) inherit the same release contract: the cached
-    fp lingers in the module tracker until ``unpersist_shingles()``
-    (or a snapshot-scoped release) runs."""
+    an already-cached frame is redundant and would stage it twice.
+    Non-dedup callers (e.g. the multimodal perceptual-hash path)
+    inherit the same release contract: the cached fp lives until the
+    caller's staging scope ends (or ``staging.release()``)."""
     lvl = fp.storageLevel
     if persist and not (lvl.useMemory or lvl.useDisk):
-        fp = persist_tracked(fp)
+        fp = stage(fp)
     buckets = fingerprint_band_buckets(fp, id_col, fp_col,
                                        n_bands=n_bands)
     a, b = buckets.alias("a"), buckets.alias("b")
@@ -1375,14 +1310,8 @@ def span_dedup(docs: DataFrame, id_col: str = "doc_id",
     # join probe side) through DIFFERENT exchanges, so ReuseExchange
     # cannot collapse them — unpersisted, the O(tokens × span_words)
     # digest projection (the docstring's dominant-CPU caveat) runs
-    # twice per action. Cached in the module cache; released by
-    # unpersist_shingles() (or a new_shingles_since re-home) like every
-    # other staged dedup frame.
-    from pyspark import StorageLevel
-
-    wins = _window_digests(base, id_col, k, delim) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _SHINGLE_CACHE.append(wins)
+    # twice per action. Staged like every other dedup frame.
+    wins = stage(_window_digests(base, id_col, k, delim))
     firsts = wins.groupBy("__dg").agg(
         F.min(F.struct(F.col(id_col), F.col("__idx"))).alias("__f"))
     drops = (wins.join(firsts, "__dg")
@@ -1704,8 +1633,8 @@ def incremental_dedup(batch: DataFrame, index_path: str, text_col: str,
       orchestrator when storage matters.
 
     Returns the kept batch rows (all original columns).  The batch
-    shingle projection is persisted for the verify join — call
-    ``unpersist_shingles()`` after the terminal action.  At cluster
+    shingle projection is staged for the verify join — release it
+    with the staging scope around the terminal action.  At cluster
     scale, write the index bucketed on ``bh`` (see
     ``sinks.write_bucketed_parquet``) to make the per-batch candidate
     join exchange-free on the index side.
@@ -1720,8 +1649,8 @@ def incremental_dedup(batch: DataFrame, index_path: str, text_col: str,
     ``PartitionFilters`` predicate on the history-shingle scan, so a
     day's batch against a year's corpus reads the few shingle
     partitions its candidates actually touch instead of scanning every
-    shingle ever indexed.  The candidate frame is persisted (released
-    by ``unpersist_shingles()``) because the bucket probe and the
+    shingle ever indexed.  The candidate frame is staged (released
+    with the shingles) because the bucket probe and the
     verify join both consume it.  Size ``id_buckets`` so one partition
     of history shingles ≈ one comfortable scan unit (history_rows /
     id_buckets × avg shingle bytes).  The value is pinned in
@@ -1742,14 +1671,10 @@ def incremental_dedup(batch: DataFrame, index_path: str, text_col: str,
 
     sh = shingle_frame(batch, text_col, id_col, shingle)
     # The signature build is the dominant per-batch cost and has THREE
-    # consumers (hist join, own join, index append) — persist it like the
-    # shingles; unpersist_shingles() releases both.
-    from pyspark import StorageLevel
-
-    buckets = _minhash_buckets(sh, id_col, [], num_hashes, bands,
-                               hash_fn) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _SHINGLE_CACHE.append(buckets)
+    # consumers (hist join, own join, index append) — stage it like the
+    # shingles.
+    buckets = stage(_minhash_buckets(sh, id_col, [], num_hashes, bands,
+                                     hash_fn))
 
     # Index schemas derive from the batch's ACTUAL computed types — a
     # hardcoded long id would corrupt reads for string/decimal
@@ -1807,8 +1732,7 @@ def incremental_dedup(batch: DataFrame, index_path: str, text_col: str,
         # The candidate frame feeds BOTH the partition probe (eager,
         # tiny) and the verify join — persist so the probe doesn't
         # recompute the bucket joins.
-        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-        _SHINGLE_CACHE.append(cands)
+        cands = stage(cands)
         need = [r["b"] for r in
                 (cands.select(F.pmod(F.xxhash64("seen_id"),
                                      F.lit(id_buckets)).alias("b"))

@@ -207,16 +207,16 @@ def dsir_select(spark: SparkSession, pool: DataFrame, target: DataFrame,
     a rerun of the same (pool, target, seed) ships the same corpus."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    from .dedup import persist_tracked
+    from .staging import stage
 
     # Stage the pool's per-occurrence (id, bucket) features ONCE: the
     # raw-model fit and the scoring pass both consume them, and each
     # previously re-tokenized + re-hashed the whole pool (two corpus
     # passes → one; md5 over every unigram+bigram occurrence is the
-    # dominant per-row cost here). Released with the shingle caches;
-    # at 100 TB the frame is corpus-token-sized — the DISK_ONLY
+    # dominant per-row cost here). Released with the caller's staging
+    # scope; at 100 TB the frame is corpus-token-sized — the DISK_ONLY
     # process default (operators/staging.py) applies to it.
-    feats = persist_tracked(
+    feats = stage(
         _exploded_buckets(pool, text_col, id_col, n_buckets))
     t_counts = bucket_counts(target, text_col, n_buckets)
     r_counts = feats.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))

@@ -25,8 +25,9 @@ Scale shape (the 100 TB lens):
   slower than letting each consumer re-split (the same
   recompute-vs-cache flip ``dedup.token_frame`` documents — it tracks
   SCAN cost, not corpus size). Pass ``persist_tokens=True`` when the
-  scan is the expensive part (remote object store, wide rows) and
-  release with ``unpersist_lm()``.
+  scan is the expensive part (remote object store, wide rows); the
+  frame is staged and released with the caller's staging scope
+  (``operators/staging.py``).
 - Scoring is two shuffle equi-joins (doc transitions ⋈ bigram table on
   (w1, w2), ⋈ context totals on w1) plus one per-document aggregate.
   Raw transitions join directly — pre-aggregating per-document
@@ -56,28 +57,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .staging import stage
 from .textstats import tokens
 
-# persisted token projections awaiting release — same contract as
-# dedup._SHINGLE_CACHE / retrieval._POSTINGS_CACHE.
-_LM_CACHE: list[DataFrame] = []
-
-
-def unpersist_lm() -> int:
-    """Release token frames persisted by ``bigram_lm_score`` /
-    ``token_frame(persist=True)`` in this process; returns how many
-    were released."""
-    n = len(_LM_CACHE)
-    while _LM_CACHE:
-        _LM_CACHE.pop().unpersist()
-    return n
+# Only an alias: the benchmark harness (perfbench/harness.py) imports it.
+from .staging import release as unpersist_lm  # noqa: F401
 
 
 def token_frame(df: DataFrame, text_col: str, id_col: str,
                 persist: bool = False, storage_level=None) -> DataFrame:
     """The ``(id_col, __toks)`` tokenized projection every LM scorer in
-    this module derives from. With ``persist=True`` the frame is cached
-    (MEMORY_AND_DISK) and registered for ``unpersist_lm()`` — stage it
+    this module derives from. With ``persist=True`` the frame is staged
+    (``staging.stage``, released with the caller's scope) — stage it
     ONCE when several scorers (or one scorer's many self-join
     consumers: ``stupid_backoff_score`` references its position frame
     six times) run over the same corpus in one plan, so the corpus is
@@ -95,10 +86,7 @@ def token_frame(df: DataFrame, text_col: str, id_col: str,
     tok = df.select(F.col(id_col), tokens(F.col(text_col))
                     .alias("__toks"))
     if persist:
-        from .staging import resolve_level
-
-        tok = tok.persist(resolve_level(storage_level))
-        _LM_CACHE.append(tok)
+        tok = stage(tok, storage_level)
     return tok
 
 
@@ -142,8 +130,8 @@ def bigram_lm_score(df: DataFrame, text_col: str, id_col: str,
     this function's internals as parquet and replay the join — the
     score side touches only those three tables plus the batch.
 
-    With ``persist_tokens=True`` call ``unpersist_lm()`` after the
-    terminal action (see the module note for when that wins). Pass a
+    With ``persist_tokens=True`` the token frame is staged in the
+    caller's staging scope (see the module note for when that wins). Pass a
     pre-staged ``tok`` (from ``token_frame``) to share ONE tokenized
     projection with other scorers in the same plan — ``text_col`` and
     ``persist_tokens`` are then ignored."""
@@ -376,18 +364,16 @@ def ccnet_buckets(scored: DataFrame, nll_col: str = "avg_nll",
     global sort, no corpus-sized window).
 
     Input rows must have non-NULL ``nll_col`` and unique ``id_col``
-    (``bigram_lm_score`` guarantees both). ``scored`` is persisted (it
+    (``bigram_lm_score`` guarantees both). ``scored`` is staged (it
     feeds the histogram, the in-bin probe and the final projection) —
-    call ``unpersist_lm()`` after the terminal action. Adds column
-    ``ppl_bucket``.
+    release it with the staging scope around the terminal action. Adds
+    column ``ppl_bucket``.
     """
     if len(labels) != parts:
         raise ValueError(f"need {parts} labels, got {len(labels)}")
-    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
-    scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-    _LM_CACHE.append(scored)
+    scored = stage(scored)
     bin_col = F.floor(F.col(nll_col) * coarse_grid)
     hist = (scored.groupBy(bin_col.alias("__bin"))
             .agg(F.count(F.lit(1)).alias("__c")))

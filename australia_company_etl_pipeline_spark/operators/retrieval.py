@@ -16,7 +16,8 @@ Scale shape (the 100 TB lens):
   persists — without it Catalyst forks the DAG and tokenizes the corpus
   once per consumer (measured: the registered query dropped from four
   corpus scans to one). Mirrors the ``shingle_frame`` pattern in
-  ``operators/dedup.py``; release with ``unpersist_postings()``.
+  ``operators/dedup.py``; released with the caller's staging scope
+  (``operators/staging.py``).
 - Document frequencies are a ``groupBy(term)`` partial-aggregated count —
   map-side combine collapses hot terms, so a corpus-universal term is NOT
   a skewed-shuffle hot key (a window over a term partition would be).
@@ -44,37 +45,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .staging import stage
 from .textstats import tokens
 
-# persisted postings frames awaiting release — same contract as
-# dedup._SHINGLE_CACHE: operators can't unpersist eagerly (the returned
-# DataFrame's lineage references the cache), so callers release after
-# their terminal action.
-_POSTINGS_CACHE: list[DataFrame] = []
-
-
-def unpersist_postings() -> int:
-    """Release postings frames persisted by ``postings_frame`` in this
-    process; returns how many were released. Call after the consuming
-    query's terminal action."""
-    n = len(_POSTINGS_CACHE)
-    while _POSTINGS_CACHE:
-        _POSTINGS_CACHE.pop().unpersist()
-    return n
-
-
-def persist_tracked(df: DataFrame, storage_level=None) -> DataFrame:
-    """Persist an auxiliary frame (a query-derived qrels projection, a
-    shared run slice) and track it for ``unpersist_postings()`` — the
-    postings build's release contract, for callers staging their own
-    multi-consumer frames inside a retrieval plan. ``storage_level``:
-    default MEMORY_AND_DISK; corpus-sized staged frames at 100 TB want
-    ``"DISK_ONLY"`` (policy in ``operators/staging.py``)."""
-    from .staging import resolve_level
-
-    out = df.persist(resolve_level(storage_level))
-    _POSTINGS_CACHE.append(out)
-    return out
+# Only an alias: the benchmark harness (perfbench/harness.py) imports it.
+from .staging import release as unpersist_postings  # noqa: F401
 
 
 def term_postings(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -97,18 +72,15 @@ def term_postings(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 def postings_frame(df: DataFrame, text_col: str, id_col: str,
                    persist: bool = True, storage_level=None) -> DataFrame:
-    """``term_postings`` persisted and tracked for
-    ``unpersist_postings()`` — build ONCE per corpus and share across
-    searches / keyterm profiling, exactly like ``dedup.shingle_frame``.
+    """``term_postings`` staged (``staging.stage``) — build ONCE per
+    corpus and share across searches / keyterm profiling, exactly like
+    ``dedup.shingle_frame``.
     ``storage_level`` defaults to MEMORY_AND_DISK; a postings frame is
     corpus-sized, so at 100 TB pass ``"DISK_ONLY"``
     (``operators/staging.py``)."""
-    from .staging import resolve_level
-
     post = term_postings(df, text_col, id_col)
     if persist:
-        post = post.persist(resolve_level(storage_level))
-        _POSTINGS_CACHE.append(post)
+        post = stage(post, storage_level)
     return post
 
 
@@ -127,10 +99,9 @@ def corpus_stats(df: DataFrame, text_col: str) -> DataFrame:
 
 def corpus_stats_frame(df: DataFrame, text_col: str,
                        persist: bool = True) -> DataFrame:
-    """``corpus_stats`` persisted and tracked for
-    ``unpersist_postings()``. The aggregate is one row, but every
-    UNcached reference replans a full corpus scan under it — a query
-    that crosses (N, avgdl) into several branches (the
+    """``corpus_stats`` staged (``staging.stage``). The aggregate is one
+    row, but every UNcached reference replans a full corpus scan under
+    it — a query that crosses (N, avgdl) into several branches (the
     ``doc_search_bm25`` fold references it through bm25 + keyterms +
     each bm25 consumer) should pay that scan once. (One row — the
     storage-level knob is irrelevant here; MEMORY_AND_DISK always.)"""
@@ -138,8 +109,7 @@ def corpus_stats_frame(df: DataFrame, text_col: str,
 
     stats = corpus_stats(df, text_col)
     if persist:
-        stats = stats.persist(StorageLevel.MEMORY_AND_DISK)
-        _POSTINGS_CACHE.append(stats)
+        stats = stage(stats, StorageLevel.MEMORY_AND_DISK)
     return stats
 
 

@@ -42,24 +42,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import staging
+
+# Only an alias: the benchmark harness (perfbench/harness.py) imports it.
+from .staging import release as unpersist_temporal  # noqa: F401
+
 _TS = "__asof_ts"
 _SIDE = "__asof_side"
 _TIE = "__asof_tie"
 _PAYLOAD = "__asof_payload"
 _BUCKET = "__range_bucket"
-
-# persisted funnel frontiers awaiting release — the
-# dedup._SHINGLE_CACHE / retrieval._POSTINGS_CACHE contract.
-_TEMPORAL_CACHE: list[DataFrame] = []
-
-
-def unpersist_temporal() -> int:
-    """Release frames persisted by ``funnel(persist_frontiers=True)``
-    in this process; returns how many were released."""
-    n = len(_TEMPORAL_CACHE)
-    while _TEMPORAL_CACHE:
-        _TEMPORAL_CACHE.pop().unpersist()
-    return n
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
@@ -501,8 +493,8 @@ def funnel(events: DataFrame, steps: list[str],
     chain per consumer — 2N scheduled scans of the event log instead
     of N. ``persist_frontiers=True`` caches each per-user frontier
     (one row per surviving user — the bounded frame this chain exists
-    to produce) so the log is scanned exactly once per step; release
-    with ``unpersist_temporal()`` after the terminal action.
+    to produce) so the log is scanned exactly once per step; they are
+    staged and released with the caller's staging scope.
     ``storage_level`` defaults to MEMORY_AND_DISK — frontiers are
     per-user rows, far smaller than the log, so the default is right
     even at 100 TB; ``"DISK_ONLY"`` remains available for funnels over
@@ -514,10 +506,7 @@ def funnel(events: DataFrame, steps: list[str],
 
     def stage(fr: DataFrame) -> DataFrame:
         if persist_frontiers:
-            from .staging import resolve_level
-
-            fr = fr.persist(resolve_level(storage_level))
-            _TEMPORAL_CACHE.append(fr)
+            fr = staging.stage(fr, storage_level)
         return fr
 
     t, u = F.col(ts_col), F.col(user_col)

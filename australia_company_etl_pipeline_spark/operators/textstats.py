@@ -648,8 +648,8 @@ def unigram_kl(df, text_col: str, stratum_col: str, alpha: float = 1.0):
 
     Scale shape: ONE exploded token scan builds the finest aggregate —
     per-(stratum, token) counts, vocabulary × strata rows at most —
-    which is staged (``persist_tracked``, released with the dedup
-    shingle caches) and re-aggregated for the corpus term counts,
+    which is staged (``staging.stage``, released with the caller's
+    staging scope) and re-aggregated for the corpus term counts,
     stratum totals and grand totals; the corpus is tokenized exactly
     once however many of the four frames the grid consumes (the
     pre-r11 form re-derived the exploded scan for each aggregate —
@@ -661,13 +661,13 @@ def unigram_kl(df, text_col: str, stratum_col: str, alpha: float = 1.0):
     (``vocab_ngram_counts`` kind='kl')."""
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
-    from .dedup import persist_tracked
+    from .staging import stage
 
     tok = (df.filter(F.col(stratum_col).isNotNull())
            .select(F.col(stratum_col).alias("stratum"),
                    F.explode(tokens(F.col(text_col))).alias("token")))
-    sc = persist_tracked(tok.groupBy("stratum", "token")
-                         .agg(F.count(F.lit(1)).alias("c_p")))
+    sc = stage(tok.groupBy("stratum", "token")
+               .agg(F.count(F.lit(1)).alias("c_p")))
     corpus = sc.groupBy("token").agg(F.sum("c_p").alias("c_q"))
     totals = corpus.agg(F.sum("c_q").alias("n_q"),
                         F.count(F.lit(1)).alias("v"))

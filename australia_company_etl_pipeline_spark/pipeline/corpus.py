@@ -8,11 +8,13 @@ run-record observability (``/root/reference/src/pipeline.py:255-281``
 stage accounting, here ONE unioned count plan instead of per-stage
 re-counts) attached to every stage boundary.
 
-Stage frames are persisted (MEMORY_AND_DISK) because two consumers pull
-on each: the next stage and the stage-count report.  Without the
-persist, the report's count job and the downstream stage would both
-recompute the full prefix of the pipeline.  Call
-``release_corpus_cache()`` after the terminal action.
+Stage frames are staged (``staging.stage``, at the staging default
+level) because two consumers pull on each: the next stage and the
+stage-count report.  Without the persist, the report's count job and
+the downstream stage would both recompute the full prefix of the
+pipeline.  Run the call and its terminal action inside
+``staging.scope()``, which releases every stage frame and every frame
+the operators staged along the way.
 """
 
 from __future__ import annotations
@@ -23,29 +25,10 @@ from pyspark.sql import functions as F
 from ..operators import dedup as dd
 from ..operators import textstats as ts
 from ..operators.audit import pipeline_run_record
+from ..operators.staging import stage
 
-_STAGE_CACHE: list[DataFrame] = []
-
-
-def release_corpus_cache() -> int:
-    """Unpersist every frame cached by ``prepare_training_corpus`` in
-    this process (stage frames + the shingle frames its decontamination
-    stage created, which the recipe re-homes into its own cache — a
-    global ``unpersist_shingles()`` here would evict frames owned by
-    unrelated callers); returns how many frames were released."""
-    n = 0
-    while _STAGE_CACHE:
-        _STAGE_CACHE.pop().unpersist()
-        n += 1
-    return n
-
-
-def _stage(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _STAGE_CACHE.append(df)
-    return df
+# Only an alias: the benchmark harness (perfbench/harness.py) imports it.
+from ..operators.staging import release as release_corpus_cache  # noqa: F401
 
 
 def prepare_training_corpus(
@@ -237,8 +220,8 @@ def prepare_training_corpus(
     ``n_tokens, pack_id, pack_offset, spans_packs``) and the one-row
     pipeline_runs record whose ``stage_counts`` JSON carries every stage
     boundary ('ingested' → … → 'packed').  Both are lazy; the report's
-    count job and the packed frame share the persisted stage prefixes —
-    call ``release_corpus_cache()`` when done.
+    count job and the packed frame share the staged stage prefixes —
+    the caller's staging scope releases them.
     """
     stages: dict[str, DataFrame] = {"ingested": docs}
 
@@ -250,7 +233,7 @@ def prepare_training_corpus(
         # content-level stage pays for them.
         from ..operators import urls as url_ops
 
-        docs = _stage(url_ops.url_dedup(docs, url_col, id_col))
+        docs = stage(url_ops.url_dedup(docs, url_col, id_col))
         stages["url_deduped"] = docs
 
     if c4_rules is not None:
@@ -261,15 +244,15 @@ def prepare_training_corpus(
         from ..operators import c4 as c4_ops
 
         cleaned = c4_ops.c4_clean(docs, text_col, **c4_rules)
-        docs = _stage(cleaned.filter(F.col("c4_reason").isNull())
-                      .withColumn(text_col, F.col("c4_text"))
-                      .drop("c4_reason", "c4_text", "c4_sentences",
-                            "c4_lines_kept", "c4_lines_total"))
+        docs = stage(cleaned.filter(F.col("c4_reason").isNull())
+                     .withColumn(text_col, F.col("c4_text"))
+                     .drop("c4_reason", "c4_text", "c4_sentences",
+                           "c4_lines_kept", "c4_lines_total"))
         stages["c4_cleaned"] = docs
 
     flagged = ts.corpus_filter(docs, text_col, **(filter_kwargs or {}))
-    kept = _stage(flagged.filter(F.col("drop_reason").isNull())
-                  .drop("drop_reason"))
+    kept = stage(flagged.filter(F.col("drop_reason").isNull())
+                 .drop("drop_reason"))
     stages["quality_filtered"] = kept
 
     if domain_cap is not None:
@@ -285,14 +268,14 @@ def prepare_training_corpus(
             # instead of a hash-random sample
             from ..operators import urls as url_ops
 
-            kept = _stage(url_ops.domain_cap(
+            kept = stage(url_ops.domain_cap(
                 kept, url_col, cap_n, authority=authority_weights))
         else:
             if authority_weights is not None:
                 raise ValueError(
                     "authority_weights needs the URL-derived cap: pass "
                     "domain_cap=(url_col, n) with url_col set")
-            kept = _stage(ts.cap_per_key(kept, [cap_col], cap_n))
+            kept = stage(ts.cap_per_key(kept, [cap_col], cap_n))
         stages["domain_capped"] = kept
     elif authority_weights is not None:
         raise ValueError("authority_weights does nothing without "
@@ -301,7 +284,7 @@ def prepare_training_corpus(
     if line_dedup_mode is not None:
         ld = dd.line_dedup(kept, id_col=id_col, text_col=text_col,
                            mode=line_dedup_mode, min_docs=line_min_docs)
-        kept = _stage(
+        kept = stage(
             kept.drop(text_col)
             .join(ld.filter(F.col("n_kept") > 0)
                   .select(id_col, F.col("text_dedup").alias(text_col)),
@@ -329,7 +312,7 @@ def prepare_training_corpus(
                 qc_ref, text_col, qc_model, pct=qc_pct)
         else:
             qc_threshold = float(qc_gate)
-        kept = _stage(
+        kept = stage(
             learn.score_documents(kept, text_col, qc_model,
                                   prob_col="__qprob")
             .filter(F.col("__qprob") >= qc_threshold).drop("__qprob"))
@@ -358,10 +341,10 @@ def prepare_training_corpus(
         fluent = (lm_ops.score_with_bigram_lm(kept, text_col, id_col,
                                               lm_path)
                   .filter(F.col("avg_nll") <= lm_max_nll).select(id_col))
-        kept = _stage(kept.join(fluent, id_col, "left_semi"))
+        kept = stage(kept.join(fluent, id_col, "left_semi"))
         stages["lm_gated"] = kept
 
-    exact = _stage(dd.exact_dedup(kept, [text_col], id_col))
+    exact = stage(dd.exact_dedup(kept, [text_col], id_col))
     stages["exact_deduped"] = exact
     current = exact
 
@@ -374,7 +357,7 @@ def prepare_training_corpus(
             clusters.select(id_col, "cluster_id"),
             current.select(id_col, near_keep_col), id_col, near_keep_col)
     keepers = clusters.filter("is_canonical").select(id_col)
-    current = _stage(current.join(keepers, id_col, "left_semi"))
+    current = stage(current.join(keepers, id_col, "left_semi"))
     stages["near_deduped"] = current
 
     if split_spec is not None:
@@ -399,7 +382,7 @@ def prepare_training_corpus(
                        n_clusters=semantic_clusters, id_col=id_col,
                        keep=semantic_keep)
         dropped = sem.filter(~F.col("is_canonical")).select(id_col)
-        current = _stage(current.join(dropped, id_col, "left_anti"))
+        current = stage(current.join(dropped, id_col, "left_anti"))
         stages["semantic_deduped"] = current
 
     if benchmark is not None or (decontaminate_metric == "semantic"
@@ -416,21 +399,16 @@ def prepare_training_corpus(
                     "benchmark_embeddings")
             emb = semantic_embeddings.join(current.select(id_col),
                                            id_col, "left_semi")
-            current = _stage(semantic_decontaminate(
+            current = stage(semantic_decontaminate(
                 current, emb, benchmark_embeddings, id_col,
                 threshold=semantic_decon_threshold))
         else:
-            # decontaminate persists shingle frames through the dedup
-            # module's cache; re-home them so release_corpus_cache()
-            # frees them without evicting unrelated callers' shingles
-            before = dd.shingle_cache_snapshot()
             extra = ({} if decontaminate_metric == "containment"
                      else {"num_hashes": num_hashes, "bands": bands})
-            current = _stage(dd.decontaminate(
+            current = stage(dd.decontaminate(
                 current, benchmark, text_col, id_col,
                 threshold=near_threshold, metric=decontaminate_metric,
                 **extra))
-            _STAGE_CACHE.extend(dd.new_shingles_since(before))
         stages["decontaminated"] = current
 
     if segment_words is not None:
@@ -442,20 +420,15 @@ def prepare_training_corpus(
             # exact substring-level dedup (Lee et al. 2022): stride-1
             # windows catch grid-straddling copies the fixed grid
             # misses; docs stripped to nothing (pure later-copies)
-            # drop. span_dedup stages its window-digest frame in the
-            # dedup module cache — re-home it (decontaminate
-            # discipline) so release_corpus_cache() frees it without
-            # evicting unrelated callers' frames
-            seg_before = dd.shingle_cache_snapshot()
+            # drop
             seg = dd.span_dedup(current, id_col=id_col,
                                 text_col=text_col,
                                 span_words=segment_words) \
                 .filter(F.col("n_kept") > 0)
-            _STAGE_CACHE.extend(dd.new_shingles_since(seg_before))
         else:
             raise ValueError(f"unknown segment_mode {segment_mode!r}: "
                              "use 'grid' or 'span'")
-        current = _stage(
+        current = stage(
             current.drop(text_col)
             .join(seg.select(id_col,
                              F.col("text_dedup").alias(text_col)), id_col))
@@ -465,7 +438,7 @@ def prepare_training_corpus(
         from ..operators import dsir
 
         dsir_target, dsir_k = dsir_selection
-        current = _stage(dsir.dsir_select(
+        current = stage(dsir.dsir_select(
             current.sparkSession, current, dsir_target, text_col, id_col,
             k=dsir_k, n_buckets=dsir_buckets).drop("logw"))
         stages["dsir_selected"] = current
@@ -484,12 +457,12 @@ def prepare_training_corpus(
             counted, mix_col, mix_weights, id_col=id_col,
             budget=mix_budget, token_count_col="n_tokens",
             unknown=mixture_unknown)
-        counted = _stage(counted)
+        counted = stage(counted)
         stages["mixture_sampled"] = counted
     # packed has up to THREE consumers (sharded write, the report's
     # count, the returned frame) — persist it like every other stage so
     # the pack window + join run once, not per consumer
-    packed = _stage(counted.join(
+    packed = stage(counted.join(
         ts.pack_sequences(counted, "n_tokens", id_col, budget=pack_budget,
                           partition_col=pack_partition_col)
         .select(id_col, "pack_id", "pack_offset", "spans_packs"), id_col))

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators import dedup as dd
+from ..operators.staging import scope, stage
 from .registry import register
 
 
@@ -643,30 +644,31 @@ def _incremental_verdicts(spark: SparkSession, corpus: DataFrame,
         import re
         import shutil
 
-        snap = dd.shingle_cache_snapshot()
-        idx = tempfile.mkdtemp(prefix="acep_incdedup_")
-        kept = []
-        for chunk in (corpus.filter(F.col("doc_id") < 100000),
-                      corpus.filter(F.col("doc_id") >= 100000)):
-            kept.append(dd.incremental_dedup(
-                chunk, idx, "text", "doc_id", threshold=0.8,
-                num_hashes=_MH_HASHES, bands=_MH_BANDS, shingle=3,
-                hash_fn="portable"))
-        kept_all = kept[0].unionByName(kept[1]).select("doc_id")
-        verdicts = (corpus.select("doc_id")
-                    .join(kept_all, "doc_id", "left_anti")
-                    .select(F.lit("incremental").alias("method"),
-                            F.col("doc_id").alias("id_a"),
-                            F.lit(None).cast("long").alias("id_b"),
-                            F.lit(None).cast("double").alias("jaccard")))
-        # write while the operator's persisted signature frames are
-        # still hot (evaluating after their release recomputes both
-        # chunks' signature builds — measured 2x the whole branch),
-        # then swap into place and release everything: the replay index
-        # and the cached frames have no further readers once the
-        # verdict table is durable
-        tmp = path + ".__build_tmp." + str(os.getpid())
-        verdicts.coalesce(1).write.mode("overwrite").parquet(tmp)
+        with scope():
+            idx = tempfile.mkdtemp(prefix="acep_incdedup_")
+            kept = []
+            for chunk in (corpus.filter(F.col("doc_id") < 100000),
+                          corpus.filter(F.col("doc_id") >= 100000)):
+                kept.append(dd.incremental_dedup(
+                    chunk, idx, "text", "doc_id", threshold=0.8,
+                    num_hashes=_MH_HASHES, bands=_MH_BANDS, shingle=3,
+                    hash_fn="portable"))
+            kept_all = kept[0].unionByName(kept[1]).select("doc_id")
+            verdicts = (
+                corpus.select("doc_id")
+                .join(kept_all, "doc_id", "left_anti")
+                .select(F.lit("incremental").alias("method"),
+                        F.col("doc_id").alias("id_a"),
+                        F.lit(None).cast("long").alias("id_b"),
+                        F.lit(None).cast("double").alias("jaccard")))
+            # write while the operator's staged signature frames are
+            # still hot (evaluating after their release recomputes both
+            # chunks' signature builds — measured 2x the whole branch);
+            # the scope then releases them and the replay index goes:
+            # neither has further readers once the verdict table is
+            # durable
+            tmp = path + ".__build_tmp." + str(os.getpid())
+            verdicts.coalesce(1).write.mode("overwrite").parquet(tmp)
         replace_dir(spark, tmp, path)
         # GC only AFTER the new generation is durable: deleting the
         # superseded sibling first would leave NO servable verdicts if
@@ -693,8 +695,6 @@ def _incremental_verdicts(spark: SparkSession, corpus: DataFrame,
                         pass
                 shutil.rmtree(os.path.join(root, name),
                               ignore_errors=True)
-        for f in dd.new_shingles_since(snap):
-            f.unpersist()
         shutil.rmtree(idx, ignore_errors=True)
     return spark.read.schema(
         "method string, id_a long, id_b long, jaccard double"
@@ -1028,13 +1028,13 @@ def embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged once: the derived corpus feeds the exact self-join (both
     # sides), the LSH bucketing, and through them the eval arm — left
     # lineage-only, the r8 fold planned 56 distinct embeddings scans
-    corpus = dd.persist_tracked(_embeddings_with_dups(spark, sf_dir))
+    corpus = stage(_embeddings_with_dups(spark, sf_dir))
     a, b = corpus.alias("a"), corpus.alias("b")
     # the exact and lsh PAIR SETS are persisted too: each is consumed
     # twice (the union output + the eval arm) and exact is the O(n²)
     # all-pairs baseline — without staging, the quadratic join runs
     # once per consumer
-    exact = dd.persist_tracked(
+    exact = stage(
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"), "inner")
         .select(F.lit("exact").alias("method"),
                 F.col("a.vec_id").alias("id_a"),
@@ -1042,7 +1042,7 @@ def embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(cosine(F.col("a.v"), F.col("b.v")), 6)
                 .alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= 0.99))
-    lsh = dd.persist_tracked(
+    lsh = stage(
         embedding_dup_pairs_lsh(corpus, threshold=0.99, n_planes=8,
                                 dim=64, seed=42, multiprobe=1,
                                 vec_col="v")
@@ -1050,7 +1050,7 @@ def embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cosine_sim"))
     # staged: both sides of the hashed all-pairs self-join read one
     # materialized feature-hash embedding build
-    hc = dd.persist_tracked(
+    hc = stage(
         embed_documents(_docs_with_dups(spark, sf_dir), "text",
                         dim=_EMBED_DIM, seed=_EMBED_SEED,
                         hash_fn="portable").select("doc_id", "embedding"))

@@ -136,9 +136,7 @@ FROM rs_z
 """,
 )
 def events_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
-    from ..operators import dedup as dd
+    from ..operators.staging import stage
     from ..operators.temporal import (bucket_zscores, fill_resampled,
                                       resample_grid)
 
@@ -151,12 +149,9 @@ def events_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE aggregate+densify pass feeds all three resample-family kinds
     # (the grid is span/interval × types — tiny — where its build plan
     # scans the big events table three times; without the stage each of
-    # zero / locf / anomaly would re-run that build). Registered in the
-    # shared release pool bench/tests already drain.
-    grid = (resample_grid(events, "ts", "value", ["event_type"],
-                          interval_s=3600)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    dd._SHINGLE_CACHE.append(grid)
+    # zero / locf / anomaly would re-run that build).
+    grid = stage(resample_grid(events, "ts", "value", ["event_type"],
+                               interval_s=3600))
     zero = fill_resampled(grid, ["event_type"], 3600, "zero")
     for fill, rs in (("zero", zero),
                      ("locf", fill_resampled(grid, ["event_type"], 3600,

@@ -177,8 +177,8 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted frontiers: each frontier feeds the next step's join AND
     # its own count row — lineage-only funnels replanned the prefix
     # chain per consumer (the fold scheduled 14 event-log scans; staged
-    # it is one filtered scan per step). Released by the caller via
-    # unpersist_temporal().
+    # it is one filtered scan per step). Released with the caller's
+    # staging scope.
     unbounded = funnel(e, steps, persist_frontiers=True).select(
         F.lit("all").alias("kind"), "step", "step_name", "n_users")
     bounded = funnel(e, steps, max_gap=86400,

@@ -24,6 +24,7 @@ from ..operators import dsir as dsir_ops
 from ..operators import lm as lm_ops
 from ..operators import textstats as ts
 from ..operators import urls as url_ops
+from ..operators.staging import stage
 from .registry import register
 
 _TOKS = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t != '')"
@@ -553,18 +554,17 @@ def vocab_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _vocab_branches(spark: SparkSession, sf_dir: str,
                     kind: str | None) -> DataFrame:
     from ..operators import cms as cms_ops
-    from ..operators import dedup as dd
 
     d = table(spark, sf_dir, "documents")
     parts: list[DataFrame] = []
     # ONE staged vocabulary aggregate (vocabulary-sized, never corpus-
-    # sized; released with the shingle caches) feeds the frequency
+    # sized; released with the caller's staging scope) feeds the frequency
     # table, the Zipf fit AND the CMS build — each previously
     # re-tokenized and re-exploded the whole corpus (r11: three
     # corpus passes → one for these three branches)
     vocab_full = None
     if kind in (None, "token", "zipf", "cms"):
-        vocab_full = dd.persist_tracked(ts.vocab_agg(d, "text"))
+        vocab_full = stage(ts.vocab_agg(d, "text"))
     if kind in (None, "token"):
         parts.append(ts.vocab_counts(d, "text", min_count=3,
                                      agg=vocab_full)
@@ -1197,7 +1197,7 @@ def _doc_search_branches(spark: SparkSession, sf_dir: str,
     if kind in (None, "search", "keyterm", "rrf", "releval"):
         # ONE persisted postings build feeds both retrieval branches and
         # the DF counts (four corpus tokenizations without it — see
-        # postings_frame docs); released by bench via unpersist_postings()
+        # postings_frame docs); released with the caller's staging scope
         post = rt.postings_frame(d, "text", "doc_id")
         # persisted: (N, avgdl) is one row, but every uncached reference
         # replans a corpus scan under it — bm25 + keyterms + the three
@@ -1253,7 +1253,7 @@ def _doc_search_branches(spark: SparkSession, sf_dir: str,
             # persisted: retrieval_eval references qrels three times
             # (run join, ideal ordering, total-relevant count) — staged
             # once, released with the postings build
-            qrels = rt.persist_tracked(d.select(
+            qrels = stage(d.select(
                 "doc_id",
                 F.when(F.col("doc_id") % 7 == 0, 2)
                 .when(F.col("doc_id") % 3 == 0, 1)
@@ -1271,7 +1271,7 @@ def _doc_search_branches(spark: SparkSession, sf_dir: str,
     if kind in (None, "lm", "ccnet", "sbo"):
         # LM scoring needs token ORDER, which the (id, term, tf) postings
         # aggregate has discarded — so the lm/ccnet/sbo subtree stages
-        # ONE persisted token frame (released via unpersist_lm()) that
+        # ONE staged token frame (released with the staging scope) that
         # both scorers derive from. r8 shipped this subtree UNcached on
         # a single-consumer measurement; with sbo's six position-frame
         # references plus bigram's three consumers the fold planned 35
@@ -1293,7 +1293,7 @@ def _doc_search_branches(spark: SparkSession, sf_dir: str,
         if kind in (None, "ccnet"):
             # ccnet_buckets persists the scored frame, so in the fold
             # the lm arm above reads the same cache instead of paying a
-            # second LM scoring pass; bench releases via unpersist_lm()
+            # second LM scoring pass
             parts.append(
                 lm_ops.ccnet_buckets(scored, "avg_nll", "doc_id")
                 .select(F.lit("ccnet").alias("kind"), "doc_id",
@@ -1970,8 +1970,6 @@ def corpus_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _corpus_filter_branches(spark: SparkSession, sf_dir: str,
                             kind: str | None) -> DataFrame:
-    from ..operators import dedup as dd
-
     d = table(spark, sf_dir, "documents")
     # ONE persisted (doc_id, lang, text) projection feeds every branch
     # (r10, the same fold-staging class as r9's bm25 fix): the fourteen
@@ -1981,11 +1979,11 @@ def _corpus_filter_branches(spark: SparkSession, sf_dir: str,
     # dsir's count-vs-kept joins, html/c4's multi-output projections) —
     # unstaged, the fold scheduled 29 distinct parquet scans; staged,
     # one scan + cached reads (InMemoryTableScan prunes columns, so a
-    # doc_id-only branch doesn't deserialize text). Released by bench/
-    # tests via unpersist_shingles(); at 100 TB this is a corpus-sized
+    # doc_id-only branch doesn't deserialize text). Released with the
+    # caller's staging scope; at 100 TB this is a corpus-sized
     # cache — pass storage_level='DISK_ONLY' via the staging policy
     # (operators/staging.py) rather than evict the working set.
-    d = dd.persist_tracked(d.select("doc_id", "lang", "text"))
+    d = stage(d.select("doc_id", "lang", "text"))
     parts: list[DataFrame] = []
     if kind in (None, "filter"):
         filtered = ts.corpus_filter(d, "text",

@@ -154,14 +154,11 @@ def _install_py4j_handle_cache() -> None:
     client), so reuse is exact; field-VALUE results are never cached
     (they can change); failures are never cached. Gateway restarts are
     safe by construction: a new JVM means new JVMView/JavaClass
-    instances, whose caches start empty. Set
-    ``SPARK_GRAFT_NO_PY4J_CACHE=1`` to skip installing (debugging).
+    instances, whose caches start empty.
 
     This is metadata/handle memoization — the same class of fix as the
     catalog's parquet-schema cache — never data, never results.
     """
-    if os.environ.get("SPARK_GRAFT_NO_PY4J_CACHE"):
-        return
     from py4j.java_gateway import JavaClass, JavaMember, JavaPackage, JVMView
 
     if getattr(JVMView, "_acep_handle_cache", False):

@@ -62,16 +62,16 @@ def stream_dedup_ingest(stream: DataFrame, out_path: str, index_path: str,
     against. Documents with no transitions (<2 tokens) fail the gate.
 
     ``id_col`` must be globally increasing across the stream (the
-    append-log contract ``incremental_dedup`` documents). Per-batch
-    operator caches are released with a snapshot diff so a long-lived
-    stream doesn't accumulate executor storage — and doesn't evict
-    shingle frames owned by unrelated callers in the same session.
+    append-log contract ``incremental_dedup`` documents). Each batch runs
+    in its own staging scope, so a long-lived stream doesn't accumulate
+    executor storage — and doesn't evict frames staged by unrelated
+    callers in the same session.
     """
     from ..operators import dedup as dd
+    from ..operators.staging import scope
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        before = dd.shingle_cache_snapshot()
-        try:
+        with scope():
             if url_col is not None:
                 from ..operators import urls as url_ops
 
@@ -95,9 +95,6 @@ def stream_dedup_ingest(stream: DataFrame, out_path: str, index_path: str,
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("__batch")
              .parquet(out_path))
-        finally:
-            for frame in dd.new_shingles_since(before):
-                frame.unpersist()
 
     writer = (stream.writeStream.foreachBatch(dedup_batch)
               .option("checkpointLocation", checkpoint_dir))

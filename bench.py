@@ -95,6 +95,7 @@ import sys
 import time
 
 from australia_company_etl_pipeline_spark import plans
+from australia_company_etl_pipeline_spark.operators import staging
 from australia_company_etl_pipeline_spark.plancheck import (
     crosses_python_boundary,
     formatted_plan,
@@ -189,29 +190,6 @@ def gc_barrier(spark) -> None:
     allocation debt (a real cluster spreads that debt across executors).
     """
     spark._jvm.System.gc()
-
-
-def _release_operator_caches() -> None:
-    """Release per-query operator caches (MinHash shingles, BM25
-    postings, LM tables) so repetitions don't accumulate executor
-    storage."""
-    from australia_company_etl_pipeline_spark.operators import (
-        cluster as cl_ops,
-    )
-    from australia_company_etl_pipeline_spark.operators import dedup as dd
-    from australia_company_etl_pipeline_spark.operators import lm as lm_ops
-    from australia_company_etl_pipeline_spark.operators import (
-        retrieval as rt,
-    )
-    from australia_company_etl_pipeline_spark.operators import (
-        temporal as tmp_ops,
-    )
-
-    dd.unpersist_shingles()
-    rt.unpersist_postings()
-    lm_ops.unpersist_lm()
-    cl_ops.unpersist_cluster()
-    tmp_ops.unpersist_temporal()
 
 
 def jvm_counters(spark) -> dict:
@@ -327,7 +305,7 @@ def _plan_guard(spark, sf_dir: str, names: list[str]) -> dict[str, bool]:
     enforce = (os.path.isdir(SF01_GOLDEN_DIR)
                and "sf0.1" in sf_dir
                and not os.environ.get("SPARK_GRAFT_SKIP_PLAN_GUARD"))
-    diverged = []
+    diverged: dict[str, str] = {}
     for name in names:
         df = plans.REGISTRY[name].builder(spark, sf_dir)
         plan = formatted_plan(df)
@@ -339,20 +317,25 @@ def _plan_guard(spark, sf_dir: str, names: list[str]) -> dict[str, bool]:
                     want = f.read()
                 skel = plan_skeleton(df)
                 if skel != want:
-                    diff = "\n".join(difflib.unified_diff(
+                    diverged[name] = "\n".join(difflib.unified_diff(
                         want.splitlines(), skel.splitlines(),
                         fromfile=f"golden_plans_sf01/{name}.txt",
                         tofile="current", lineterm=""))
-                    diverged.append(f"--- {name} ---\n{diff}")
-        _release_operator_caches()
+        staging.release()
     if diverged:
+        # a refusal still leaves one machine-readable line on stdout
+        print(json.dumps({"metric": "headline_queries_total",
+                          "value": None, "error": "plan_guard",
+                          "diverged": list(diverged)}))
+        sys.stdout.flush()
         print("PLAN GUARD: bench-scale plan skeletons diverged from "
               "tests/golden_plans_sf01/ — refusing to record a window "
               "that measures a different plan. Regenerate goldens "
               "(SPARK_GRAFT_SF01_GOLDENS=1 UPDATE_GOLDEN_PLANS=1 pytest "
               "tests/test_golden_plans.py) if the change is intentional, "
               "or set SPARK_GRAFT_SKIP_PLAN_GUARD=1.\n"
-              + "\n".join(diverged), file=sys.stderr)
+              + "\n".join(f"--- {n} ---\n{d}"
+                          for n, d in diverged.items()), file=sys.stderr)
         spark.stop()
         sys.exit(2)
     return py_flags
@@ -388,7 +371,7 @@ def main() -> None:
                                       w0, time.time())
         warmup_jvm[name]["sec"] = round(
             warmup_jvm[name]["t1"] - warmup_jvm[name]["t0"], 3)
-        _release_operator_caches()
+        staging.release()
     # SECOND warm-up pass for the heavy queries (r11, closes the r10
     # "warm-up gap"): one execution leaves most codegen methods at C1 —
     # C2 tiering triggers on the SECOND run, so rep 1 of every heavy
@@ -406,7 +389,7 @@ def main() -> None:
         warmup_jvm[name + "#2"]["sec"] = round(
             warmup_jvm[name + "#2"]["t1"]
             - warmup_jvm[name + "#2"]["t0"], 3)
-        _release_operator_caches()
+        staging.release()
 
     # REPS interleaved rounds (round-robin, not back-to-back, so a load
     # spike on the shared bench machine hits different queries each
@@ -442,7 +425,7 @@ def main() -> None:
             times[name].append(time.perf_counter() - t0)
             jvm_reps[name].append(
                 _jvm_delta(c0, jvm_counters(spark), w0, time.time()))
-            _release_operator_caches()
+            staging.release()
     per_query = {n: round(statistics.median(ts), 3)
                  for n, ts in times.items()}
     per_query_min = {n: round(min(ts), 3) for n, ts in times.items()}
@@ -472,7 +455,7 @@ def main() -> None:
             t0 = time.perf_counter()
             force(plans.REGISTRY[name].branches[branch](spark, sf_dir))
             btimes[(name, branch)].append(time.perf_counter() - t0)
-            _release_operator_caches()
+            staging.release()
     branches: dict[str, dict[str, float]] = {}
     branches_reps: dict[str, dict[str, list[float]]] = {}
     for (name, branch), ts in btimes.items():

@@ -9,6 +9,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from australia_company_etl_pipeline_spark import plans  # noqa: E402
+from australia_company_etl_pipeline_spark.operators import (  # noqa: E402
+    staging,
+)
 from australia_company_etl_pipeline_spark.plancheck import (  # noqa: E402
     formatted_plan,
 )
@@ -27,8 +30,5 @@ for name in NAMES:
     with open(os.path.join(OUT, f"{name}_{TAG}.txt"), "w") as f:
         f.write(formatted_plan(df))
     print("captured", name, flush=True)
-    from australia_company_etl_pipeline_spark.operators import (
-        cluster as cl, dedup as dd, lm, retrieval as rt, temporal as tp)
-    dd.unpersist_shingles(); rt.unpersist_postings(); lm.unpersist_lm()
-    cl.unpersist_cluster(); tp.unpersist_temporal()
+    staging.release()
 spark.stop()

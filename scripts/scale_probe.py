@@ -61,7 +61,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from australia_company_etl_pipeline_spark.catalog import table  # noqa: E402
 from australia_company_etl_pipeline_spark.operators import ann  # noqa: E402
 from australia_company_etl_pipeline_spark.operators import (  # noqa: E402
-    dedup as dd)
+    dedup as dd, staging)
 from australia_company_etl_pipeline_spark.operators import (  # noqa: E402
     dsir)
 from australia_company_etl_pipeline_spark.session import get_spark  # noqa: E402
@@ -90,7 +90,7 @@ def main() -> None:
             kept = dd.incremental_dedup(batch, idx, "text", "doc_id")
             n = kept.count()
             sec = time.time() - t
-            dd.unpersist_shingles()
+            staging.release()
             print(f"incremental_dedup batch={k} kept={n} "
                   f"history_rows={(k + 1) * n_docs} sec={sec:.2f}")
 
@@ -156,10 +156,10 @@ def main() -> None:
         t = time.time()
         force(dd.span_dedup(corpus, span_words=8))
         sec = time.time() - t
-        # span_dedup stages its window-digest frame in the module
-        # cache — release per mult so the pinned frames don't compound
-        # across replications and distort the very trend being measured
-        dd.unpersist_shingles()
+        # span_dedup stages its window-digest frame — release per mult
+        # so the pinned frames don't compound across replications and
+        # distort the very trend being measured
+        staging.release()
         print(f"span_dedup mult={mult} rows={rows} sec={sec:.2f}")
 
     # --- jaccard_similarity_join: linear backbone, no pair space ------
@@ -189,7 +189,7 @@ def main() -> None:
         t = time.time()
         force(dd.jaccard_similarity_join(sh, "doc_id", threshold=0.8))
         sec = time.time() - t
-        dd.unpersist_shingles()
+        staging.release()
         print(f"jaccard_similarity_join mult={mult} rows={rows} "
               f"sec={sec:.2f}")
 

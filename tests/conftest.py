@@ -7,6 +7,7 @@ import os
 import duckdb
 import pytest
 
+from australia_company_etl_pipeline_spark.operators import staging
 from australia_company_etl_pipeline_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -19,6 +20,15 @@ def spark():
     spark = get_spark("ace-spark-tests", shuffle_partitions=8,
                       extra_conf={"spark.driver.memory": "4g"})
     yield spark
+
+
+@pytest.fixture(autouse=True)
+def _staging_scope():
+    """Each test runs in its own staging scope: every frame it (or a
+    builder it calls) stages is unpersisted when the test ends, pass or
+    fail."""
+    with staging.scope():
+        yield
 
 
 @pytest.fixture(scope="session")

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from australia_company_etl_pipeline_spark import plans
 from australia_company_etl_pipeline_spark.operators import ann
 from australia_company_etl_pipeline_spark.operators import dedup as dd
+from australia_company_etl_pipeline_spark.operators import staging
 
 
 def _pairs(df):
@@ -336,9 +337,9 @@ def test_kmeans_centroids_deterministic_and_shaped(spark, sf_dir):
 
 
 def test_unpersist_shingles_releases_cache(spark):
-    """minhash_dup_pairs persists its shingle projection (it feeds both
-    the signature build and the verify join); unpersist_shingles() must
-    release everything tracked and drain the registry."""
+    """minhash_dup_pairs stages its shingle projection (it feeds both
+    the signature build and the verify join); staging.release() must
+    unpersist everything the scope staged and drain it."""
     corpus = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta"),
          (2, "alpha beta gamma delta epsilon zeta"),
@@ -346,8 +347,8 @@ def test_unpersist_shingles_releases_cache(spark):
         "doc_id long, text string")
     pairs = dd.minhash_dup_pairs(corpus, "text", "doc_id", threshold=0.8)
     assert pairs.count() >= 1
-    assert dd.unpersist_shingles() >= 1
-    assert dd.unpersist_shingles() == 0
+    assert staging.release() >= 1
+    assert staging.release() == 0
 
 
 def test_kmeans_empty_cluster_reseed_vs_drop(spark):
@@ -580,7 +581,6 @@ def _run_chunks(spark, tmp_path, docs, chunks, tag):
                                    threshold=0.8)
         kept += [r["doc_id"] for r in out.select("doc_id").collect()]
         start += size
-    dd.unpersist_shingles()
     assert start == len(docs)
     return sorted(kept)
 
@@ -638,7 +638,6 @@ def test_incremental_dedup_portable_backend_index_roundtrip(spark,
         out = dd.incremental_dedup(batch, idx, "text", "doc_id",
                                    threshold=0.8, hash_fn="portable")
         kept += [r["doc_id"] for r in out.select("doc_id").collect()]
-    dd.unpersist_shingles()
     assert sorted(kept) == native == list(range(30))
 
 
@@ -653,7 +652,6 @@ def test_incremental_dedup_replay_is_safe(spark, tmp_path):
         batch, idx, "text", "doc_id", threshold=0.8).collect())
     replay = sorted(r["doc_id"] for r in dd.incremental_dedup(
         batch, idx, "text", "doc_id", threshold=0.8).collect())
-    dd.unpersist_shingles()
     assert replay == first and len(first) == 30
 
 
@@ -918,9 +916,9 @@ def test_compact_dedup_index_removes_replay_duplicates(spark, tmp_path):
     schema = "doc_id long, text string"
     b1 = spark.createDataFrame([doc(i) for i in range(5)], schema)
     dd.incremental_dedup(b1, index, "text", "doc_id")
-    dd.unpersist_shingles()
+    staging.release()
     dd.incremental_dedup(b1, index, "text", "doc_id")  # replay: re-append
-    dd.unpersist_shingles()
+    staging.release()
     dup_rows = spark.read.parquet(f"{index}/shingles").count()
     removed = dd.compact_dedup_index(spark, index)
     assert removed["shingles"] == dup_rows // 2 > 0
@@ -931,7 +929,6 @@ def test_compact_dedup_index_removes_replay_duplicates(spark, tmp_path):
     b2 = spark.createDataFrame([doc(10, copy_of=2), doc(11)], schema)
     kept = dd.incremental_dedup(b2, index, "text", "doc_id")
     assert sorted(r.doc_id for r in kept.collect()) == [11]
-    dd.unpersist_shingles()
 
 
 def test_incremental_dedup_refuses_crashed_compaction_state(spark,
@@ -954,13 +951,12 @@ def test_incremental_dedup_refuses_crashed_compaction_state(spark,
     def crashed(mutate):
         idx = str(tmp_path / f"idx_{mutate.__name__}")
         dd.incremental_dedup(b1, idx, "text", "doc_id")
-        dd.unpersist_shingles()
+        staging.release()
         mutate(idx)
         with pytest.raises(IOError, match="crashed compaction"):
             dd.incremental_dedup(b1.select(
                 (F.col("doc_id") + 10).alias("doc_id"), "text"),
                 idx, "text", "doc_id")
-        dd.unpersist_shingles()
 
     # buckets mid-swap: renamed to .__old, replacement never landed
     def buckets_old(idx):
@@ -983,13 +979,12 @@ def test_incremental_dedup_refuses_crashed_compaction_state(spark,
     # between the two writes reads as an empty bucket history
     idx = str(tmp_path / "idx_orphan")
     dd.incremental_dedup(b1, idx, "text", "doc_id")
-    dd.unpersist_shingles()
+    staging.release()
     shutil.rmtree(f"{idx}/buckets")
     kept = dd.incremental_dedup(
         b1.select((F.col("doc_id") + 10).alias("doc_id"), "text"),
         idx, "text", "doc_id")
     assert kept.count() == 4     # no bucket history -> nothing drops
-    dd.unpersist_shingles()
 
 
 def test_portable_sketch_backends_precision_and_planted_recall(spark):
@@ -1012,7 +1007,6 @@ def test_portable_sketch_backends_precision_and_planted_recall(spark):
     mh = _pairs(dd.minhash_dup_pairs(df, "text", "doc_id", threshold=0.8,
                                      num_hashes=16, bands=4,
                                      hash_fn="portable"))
-    dd.unpersist_shingles()
     assert mh <= exact                       # exact verify → no false hits
     copies = {(g * 10, g * 10 + 1) for g in range(6)}
     assert copies <= mh                      # identical text always found
@@ -1039,7 +1033,6 @@ def test_minhash_bad_hash_fn_raises(spark):
     with pytest.raises(ValueError, match="hash_fn"):
         dd.simhash_dup_pairs(df, "text", "doc_id",
                              hash_fn="md5").count()
-    dd.unpersist_shingles()
 
 
 def test_dimension_mismatch_raises_not_zeroes(spark, sf_dir, tmp_path):
@@ -1095,7 +1088,6 @@ def test_token_frame_derived_families_match_direct(spark):
                   dd.simhash_table(df, "text", "doc_id",
                                    tokens_df=toks).collect()}
     assert direct_fp == derived_fp
-    dd.unpersist_shingles()
 
 
 def test_line_dedup_first_vs_common_semantics(spark):
@@ -1393,9 +1385,9 @@ def test_span_dedup_fuzz_vs_python_oracle(spark):
             got = {r.doc_id: (r.n_tokens, r.n_kept, r.text_dedup)
                    for r in dd.span_dedup(df, span_words=k).collect()}
         finally:
-            # span_dedup stages its digest frame in the module cache;
-            # release per example or the fuzz pins one frame per case
-            dd.unpersist_shingles()
+            # span_dedup stages its digest frame; release per example
+            # or the fuzz pins one frame per case
+            staging.release()
         assert got == expect
 
     check()
@@ -1419,7 +1411,6 @@ def test_containment_catches_embedded_leak_jaccard_misses(spark):
 
     pairs = dd.containment_pairs(corpus, bench, "text", "doc_id",
                                  threshold=0.8).collect()
-    dd.unpersist_shingles()
     assert [(r.corpus_id, r.benchmark_id, r.containment)
             for r in pairs] == [(1, 900, 1.0)]
 
@@ -1429,7 +1420,6 @@ def test_containment_catches_embedded_leak_jaccard_misses(spark):
     kept_j = {r.doc_id for r in dd.decontaminate(
         corpus, bench, "text", "doc_id", threshold=0.8,
         metric="jaccard").collect()}
-    dd.unpersist_shingles()
     assert kept_c == {2}           # leak removed
     assert kept_j == {1, 2}        # whole-doc jaccard blind to it
 
@@ -1471,7 +1461,6 @@ def test_containment_excludes_sub_shingle_benchmark_rows(spark):
         "containment_pairs plan build must not trigger a Spark job"
     # ...and the action still excludes the sub-shingle row silently
     pairs = plan.collect()
-    dd.unpersist_shingles()
     assert [(r.corpus_id, r.benchmark_id) for r in pairs] == [(1, 900)]
 
     # the lazy accounting companion lists exactly the excluded rows
@@ -1483,11 +1472,9 @@ def test_containment_excludes_sub_shingle_benchmark_rows(spark):
                       match="below\\s+n-gram resolution|below "):
         dd.containment_pairs(corpus, bench, "text", "doc_id",
                              threshold=0.8, on_short="warn")
-    dd.unpersist_shingles()
     with pytest.raises(ValueError, match="below n-gram resolution"):
         dd.containment_pairs(corpus, bench, "text", "doc_id",
                              threshold=0.8, on_short="error")
-    dd.unpersist_shingles()
     with pytest.raises(ValueError, match="unknown on_short"):
         dd.containment_pairs(corpus, bench, "text", "doc_id",
                              on_short="loud")
@@ -1626,7 +1613,6 @@ def _run_chunks_bucketed(spark, tmp_path, docs, chunks, tag, id_buckets):
                                    threshold=0.8, id_buckets=id_buckets)
         kept += [r["doc_id"] for r in out.select("doc_id").collect()]
         start += size
-    dd.unpersist_shingles()
     return sorted(kept)
 
 
@@ -1653,12 +1639,11 @@ def test_incremental_dedup_id_buckets_prunes_history_scan(spark,
     idx = str(tmp_path / "idx_prune")
     b1 = spark.createDataFrame(docs[:20], "doc_id long, text string")
     dd.incremental_dedup(b1, idx, "text", "doc_id", id_buckets=16)
-    dd.unpersist_shingles()
+    staging.release()
     b2 = spark.createDataFrame(docs[20:], "doc_id long, text string")
     out = dd.incremental_dedup(b2, idx, "text", "doc_id", id_buckets=16)
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted")
-    dd.unpersist_shingles()
     assert "PartitionFilters: [__pb" in plan.replace("#", " #") or \
         "__pb" in plan.split("PartitionFilters")[1][:200], plan
     # and the partitioned table really is laid out in __pb= dirs
@@ -1674,7 +1659,7 @@ def test_compact_preserves_id_bucket_layout(spark, tmp_path):
     b = spark.createDataFrame(docs, "doc_id long, text string")
     dd.incremental_dedup(b, idx, "text", "doc_id", id_buckets=4)
     dd.incremental_dedup(b, idx, "text", "doc_id", id_buckets=4)  # replay
-    dd.unpersist_shingles()
+    staging.release()
     removed = dd.compact_dedup_index(spark, idx)
     assert removed["shingles"] > 0
     import os
@@ -1686,7 +1671,6 @@ def test_compact_preserves_id_bucket_layout(spark, tmp_path):
         [(500, docs[0][1])], "doc_id long, text string")
     out = dd.incremental_dedup(extra, idx, "text", "doc_id",
                                id_buckets=4)
-    dd.unpersist_shingles()
     assert out.count() == 0  # exact copy of doc 0 → dropped
 
 
@@ -1906,12 +1890,11 @@ def test_incremental_dedup_id_buckets_mismatch_raises(spark, tmp_path):
                               "doc_id long, text string")
     idx = str(tmp_path / "midx_lay")
     dd.incremental_dedup(b, idx, "text", "doc_id", id_buckets=4)
-    dd.unpersist_shingles()
+    staging.release()
     with pytest.raises(ValueError, match="id_buckets"):
         dd.incremental_dedup(b, idx, "text", "doc_id", id_buckets=8)
     with pytest.raises(ValueError, match="id_buckets"):
         dd.incremental_dedup(b, idx, "text", "doc_id")
-    dd.unpersist_shingles()
 
 
 def test_incremental_exact_dedup_legacy_index_backfills_layout_meta(
@@ -1962,7 +1945,6 @@ def test_incremental_verdicts_cached_per_dataset_key(spark, sf_dir):
         again.explain("formatted")
     plan = buf.getvalue()
     assert "Join" not in plan and "Window" not in plan, plan
-    dd.unpersist_shingles()
 
 
 # ----------------------------------------------------- random projection

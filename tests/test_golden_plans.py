@@ -33,32 +33,9 @@ GOLDEN_SF01_DIR = os.path.join(os.path.dirname(__file__),
                                "golden_plans_sf01")
 
 
-def _release_caches():
-    from australia_company_etl_pipeline_spark.operators import (
-        cluster as cl_ops,
-    )
-    from australia_company_etl_pipeline_spark.operators import dedup as dd
-    from australia_company_etl_pipeline_spark.operators import lm as lm_ops
-    from australia_company_etl_pipeline_spark.operators import (
-        retrieval as rt,
-    )
-    from australia_company_etl_pipeline_spark.operators import (
-        temporal as tmp_ops,
-    )
-
-    dd.unpersist_shingles()
-    rt.unpersist_postings()
-    lm_ops.unpersist_lm()
-    cl_ops.unpersist_cluster()
-    tmp_ops.unpersist_temporal()
-
-
 @pytest.mark.parametrize("name", sorted(plans.REGISTRY))
 def test_plan_skeleton_matches_golden(spark, sf_dir, name):
-    try:
-        skel = _skeleton(plans.REGISTRY[name].builder(spark, sf_dir))
-    finally:
-        _release_caches()
+    skel = _skeleton(plans.REGISTRY[name].builder(spark, sf_dir))
     path = os.path.join(GOLDEN_DIR, f"{name}.txt")
     if os.environ.get("UPDATE_GOLDEN_PLANS"):
         os.makedirs(GOLDEN_DIR, exist_ok=True)
@@ -110,10 +87,7 @@ def test_sf01_plan_skeleton_matches_golden(spark, name):
     sf01_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if name not in plans.REGISTRY:
         pytest.skip(f"{name} not registered")
-    try:
-        skel = _skeleton(plans.REGISTRY[name].builder(spark, sf01_dir))
-    finally:
-        _release_caches()
+    skel = _skeleton(plans.REGISTRY[name].builder(spark, sf01_dir))
     path = os.path.join(GOLDEN_SF01_DIR, f"{name}.txt")
     if os.environ.get("UPDATE_GOLDEN_PLANS"):
         os.makedirs(GOLDEN_SF01_DIR, exist_ok=True)
@@ -133,3 +107,30 @@ def test_sf01_plan_skeleton_matches_golden(spark, name):
         raise AssertionError(
             f"bench-scale plan skeleton changed for {name!r} — if "
             f"intentional, regenerate and review:\n{diff}")
+
+
+def test_plan_guard_refusal_prints_machine_readable_line(
+        spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """A bench that refuses to time on plan drift still leaves one JSON
+    line on stdout naming the diverged queries, then exits 2."""
+    import json
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
+    import bench
+
+    bench_sf = tmp_path / "sf0.1"          # the guard's bench-scale dir
+    bench_sf.symlink_to(sf_dir)
+    goldens = tmp_path / "goldens"
+    goldens.mkdir()
+    (goldens / "abn_validate_format.txt").write_text("not this plan\n")
+    monkeypatch.setattr(bench, "SF01_GOLDEN_DIR", str(goldens))
+    monkeypatch.delenv("SPARK_GRAFT_SKIP_PLAN_GUARD", raising=False)
+    monkeypatch.setattr(spark, "stop", lambda: None)  # shared session
+    with pytest.raises(SystemExit) as exit_info:
+        bench._plan_guard(spark, str(bench_sf), ["abn_validate_format"])
+    assert exit_info.value.code == 2
+    out = capsys.readouterr().out.strip().splitlines()
+    assert json.loads(out[-1]) == {
+        "metric": "headline_queries_total", "value": None,
+        "error": "plan_guard", "diverged": ["abn_validate_format"]}

@@ -310,35 +310,13 @@ def test_registry_wide_no_unexpected_nested_loops(spark, sf_dir):
                                    # generated time axis — both sides
                                    # bounded (span/interval), not data
     }
-    from australia_company_etl_pipeline_spark.operators import dedup as dd
-    from australia_company_etl_pipeline_spark.operators import lm as lm_ops
-    from australia_company_etl_pipeline_spark.operators import (
-        retrieval as rt,
-    )
-
     offenders = {}
-    try:
-        for name, q in plans.REGISTRY.items():
-            plan = _plan(q.builder(spark, sf_dir))
-            marks = [m for m in ("CartesianProduct",
-                                 "BroadcastNestedLoopJoin") if m in plan]
-            if marks and name not in allowed:
-                offenders[name] = marks
-    finally:
-        # some builders persist operator frames (dedup shingles, BM25
-        # postings); don't leak them into the rest of the pytest session
-        from australia_company_etl_pipeline_spark.operators import (
-            cluster as cl_ops,
-        )
-        from australia_company_etl_pipeline_spark.operators import (
-            temporal as tmp_ops,
-        )
-
-        dd.unpersist_shingles()
-        rt.unpersist_postings()
-        lm_ops.unpersist_lm()
-        cl_ops.unpersist_cluster()
-        tmp_ops.unpersist_temporal()
+    for name, q in plans.REGISTRY.items():
+        plan = _plan(q.builder(spark, sf_dir))
+        marks = [m for m in ("CartesianProduct",
+                             "BroadcastNestedLoopJoin") if m in plan]
+        if marks and name not in allowed:
+            offenders[name] = marks
     assert not offenders, offenders
 
 
@@ -459,17 +437,7 @@ def test_registry_wide_scan_count_budgets(spark, sf_dir):
     extra scan is a full I/O pass over the table)."""
     import re
 
-    from australia_company_etl_pipeline_spark.operators import (
-        cluster as cl_ops,
-    )
-    from australia_company_etl_pipeline_spark.operators import dedup as dd
-    from australia_company_etl_pipeline_spark.operators import lm as lm_ops
-    from australia_company_etl_pipeline_spark.operators import (
-        retrieval as rt,
-    )
-    from australia_company_etl_pipeline_spark.operators import (
-        temporal as tmp_ops,
-    )
+    from australia_company_etl_pipeline_spark.operators import staging
 
     assert set(_SCAN_BUDGET) == set(plans.REGISTRY), (
         "budget table out of sync with the registry — add/remove the "
@@ -477,34 +445,23 @@ def test_registry_wide_scan_count_budgets(spark, sf_dir):
     over = {}
     actual = {}
     py_offenders = []
-    try:
-        for name, q in plans.REGISTRY.items():
-            plan = _plan(q.builder(spark, sf_dir))
-            n = len(set(re.findall(r"\((\d+)\) Scan parquet", plan)))
-            actual[name] = n
-            if n > _SCAN_BUDGET[name]:
-                over[name] = (n, _SCAN_BUDGET[name])
-            # Python-group-map confinement (r10, VERDICT task 7): the
-            # pandas sessionizer twin is a PARITY EXHIBIT, not a
-            # composition path — nothing else may silently grow a
-            # grouped/arrow Python map stage (row-shipping Python in a
-            # hot path is the classic 10-100x scale regression).
-            for node, ok_names in _PY_MAP_ALLOWED.items():
-                if node in plan and name not in ok_names:
-                    py_offenders.append((name, node))
-            # release per-query staged frames so later queries in this
-            # sweep plan against a clean cache
-            dd.unpersist_shingles()
-            rt.unpersist_postings()
-            lm_ops.unpersist_lm()
-            cl_ops.unpersist_cluster()
-            tmp_ops.unpersist_temporal()
-    finally:
-        dd.unpersist_shingles()
-        rt.unpersist_postings()
-        lm_ops.unpersist_lm()
-        cl_ops.unpersist_cluster()
-        tmp_ops.unpersist_temporal()
+    for name, q in plans.REGISTRY.items():
+        plan = _plan(q.builder(spark, sf_dir))
+        n = len(set(re.findall(r"\((\d+)\) Scan parquet", plan)))
+        actual[name] = n
+        if n > _SCAN_BUDGET[name]:
+            over[name] = (n, _SCAN_BUDGET[name])
+        # Python-group-map confinement (r10, VERDICT task 7): the
+        # pandas sessionizer twin is a PARITY EXHIBIT, not a
+        # composition path — nothing else may silently grow a
+        # grouped/arrow Python map stage (row-shipping Python in a
+        # hot path is the classic 10-100x scale regression).
+        for node, ok_names in _PY_MAP_ALLOWED.items():
+            if node in plan and name not in ok_names:
+                py_offenders.append((name, node))
+        # release per-query staged frames so later queries in this
+        # sweep plan against a clean cache
+        staging.release()
     # Budget ratchet report (r10): slack between the pinned budget and
     # the measured count invites silent creep UP TO the pin — write the
     # per-query budget−actual table so tightening opportunities are a
@@ -655,7 +612,6 @@ def test_ccnet_buckets_lazy_bounded_boundary_plan(spark):
     j0 = _max_job()
     out = lm_ops.ccnet_buckets(df, "avg_nll", "doc_id")
     plan = _plan(out)
-    lm_ops.unpersist_lm()
     assert _max_job() == j0, "ccnet_buckets ran eager driver jobs"
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan

@@ -157,34 +157,24 @@ def test_registered_query_shares_one_postings_build(spark, sf_dir):
     acep_rag_cache) — bounded artifact reads, not corpus passes, so
     they are budgeted separately."""
     from australia_company_etl_pipeline_spark import plans
-    from australia_company_etl_pipeline_spark.operators import (
-        cluster as cl_ops,
-    )
-    from australia_company_etl_pipeline_spark.operators import lm as lmo
 
-    try:
-        plan = _plan(plans.REGISTRY["doc_search_bm25"]
-                     .builder(spark, sf_dir))
-        # postings consumers (2 term branches × score side + DF side)
-        # all read the one cached postings build
-        assert plan.count("InMemoryTableScan") >= 4, plan
-        # distinct parquet-scan NODES (formatted explain reprints a
-        # cached build subtree — same node id — under every consumer),
-        # split base-table vs persisted-artifact reads
-        import re
+    plan = _plan(plans.REGISTRY["doc_search_bm25"].builder(spark, sf_dir))
+    # postings consumers (2 term branches × score side + DF side)
+    # all read the one cached postings build
+    assert plan.count("InMemoryTableScan") >= 4, plan
+    # distinct parquet-scan NODES (formatted explain reprints a
+    # cached build subtree — same node id — under every consumer),
+    # split base-table vs persisted-artifact reads
+    import re
 
-        ids = {m.group(1): m.group(2) for m in re.finditer(
-            r"\((\d+)\) Scan parquet\s*\n(?:.*\n)*?"
-            r"Location.*?([a-z_]+\.parquet|acep_rag_cache)", plan)}
-        base = [i for i, loc in ids.items() if loc.endswith(".parquet")]
-        artifact = [i for i, loc in ids.items()
-                    if loc == "acep_rag_cache"]
-        assert len(base) <= 7, sorted(ids.items())
-        assert len(artifact) <= 7, sorted(ids.items())
-    finally:
-        rt.unpersist_postings()
-        lmo.unpersist_lm()
-        cl_ops.unpersist_cluster()
+    ids = {m.group(1): m.group(2) for m in re.finditer(
+        r"\((\d+)\) Scan parquet\s*\n(?:.*\n)*?"
+        r"Location.*?([a-z_]+\.parquet|acep_rag_cache)", plan)}
+    base = [i for i, loc in ids.items() if loc.endswith(".parquet")]
+    artifact = [i for i, loc in ids.items()
+                if loc == "acep_rag_cache"]
+    assert len(base) <= 7, sorted(ids.items())
+    assert len(artifact) <= 7, sorted(ids.items())
 
 
 def test_rrf_fuse_hand_golden(spark):

@@ -86,7 +86,7 @@ def test_decontaminate_drops_hits_keeps_unembedded(spark, frames):
 
 def test_recipe_semantic_metric(spark, frames):
     from australia_company_etl_pipeline_spark.pipeline.corpus import (
-        prepare_training_corpus, release_corpus_cache)
+        prepare_training_corpus)
 
     corpus_emb, bench_emb = frames
     texts = [(i, " ".join(f"w{i}t{j} unique token stream number {j}"
@@ -96,18 +96,15 @@ def test_recipe_semantic_metric(spark, frames):
     emb = corpus_emb.select(F.col("vec_id").alias("doc_id"), "embedding")
     bench_emb = bench_emb.select(F.col("vec_id").alias("doc_id"),
                                  "embedding")
-    try:
-        packed, report = prepare_training_corpus(
-            docs, decontaminate_metric="semantic",
-            benchmark_embeddings=bench_emb, semantic_embeddings=emb,
-            semantic_decon_threshold=0.95,
-            filter_kwargs={"min_tokens": 1, "min_quality": 0.0},
-            pack_budget=2048)
-        kept = {r.doc_id for r in packed.select("doc_id").collect()}
-        assert kept & set(range(5)) == set()     # paraphrase twins out
-        assert len(kept & set(range(5, 200))) > 150
-    finally:
-        release_corpus_cache()
+    packed, report = prepare_training_corpus(
+        docs, decontaminate_metric="semantic",
+        benchmark_embeddings=bench_emb, semantic_embeddings=emb,
+        semantic_decon_threshold=0.95,
+        filter_kwargs={"min_tokens": 1, "min_quality": 0.0},
+        pack_budget=2048)
+    kept = {r.doc_id for r in packed.select("doc_id").collect()}
+    assert kept & set(range(5)) == set()     # paraphrase twins out
+    assert len(kept & set(range(5, 200))) > 150
 
     with pytest.raises(ValueError, match="semantic"):
         prepare_training_corpus(docs, decontaminate_metric="semantic",

@@ -765,8 +765,9 @@ def test_event_transitions_bot_user_cap(spark):
 
 def test_funnel_persist_frontiers_matches_and_stages(spark):
     """persist_frontiers=True returns identical counts while staging
-    each per-user frontier once (released via unpersist_temporal) —
+    each per-user frontier once (released with the staging scope) —
     the event_funnel fold's 14-scans-of-the-log fix."""
+    from australia_company_etl_pipeline_spark.operators import staging
     from australia_company_etl_pipeline_spark.operators import (
         temporal as tmp,
     )
@@ -780,19 +781,14 @@ def test_funnel_persist_frontiers_matches_and_stages(spark):
         "user_id", "event_type",
         F.timestamp_seconds(F.col("secs")).alias("ts"))
     steps = ["view", "click", "purchase"]
-    # drain frames other tests' builders may have staged in this
-    # process (the oracle sweep runs event_funnel without releasing)
-    tmp.unpersist_temporal()
-    try:
-        staged = {r.step_name: r.n_users
-                  for r in tmp.funnel(df, steps,
-                                      persist_frontiers=True).collect()}
-        plain = {r.step_name: r.n_users
-                 for r in tmp.funnel(df, steps).collect()}
-        assert staged == plain == {"view": 2, "click": 2, "purchase": 1}
-    finally:
-        assert tmp.unpersist_temporal() == 3     # one per step
-    assert tmp.unpersist_temporal() == 0
+    staged = {r.step_name: r.n_users
+              for r in tmp.funnel(df, steps,
+                                  persist_frontiers=True).collect()}
+    plain = {r.step_name: r.n_users
+             for r in tmp.funnel(df, steps).collect()}
+    assert staged == plain == {"view": 2, "click": 2, "purchase": 1}
+    assert staging.release() == 3     # one per step
+    assert staging.release() == 0
 
 
 def test_event_transitions_equal_ts_order_pinned_by_id(spark):

@@ -565,7 +565,6 @@ def test_bigram_lm_score_hand_computed(spark):
         "doc_id long, text string")
     got = {r.doc_id: r for r in
            lm.bigram_lm_score(df, "text", "doc_id").collect()}
-    lm.unpersist_lm()
     nll_ab = round(-math.log(4 / 8), 6)
     nll_b_ = round(-math.log(2 / 7), 6)
     assert set(got) == {1, 2}
@@ -598,7 +597,6 @@ def test_bigram_lm_score_ranks_disfluent_text_last(spark):
     pruned = {r.doc_id: r.avg_nll for r in
               lm.bigram_lm_score(df, "text", "doc_id",
                                  min_count=5).collect()}
-    lm.unpersist_lm()
     assert base[0] < base[100]            # fluent beats salad
     assert all(base[i] == base[0] for i in range(20))  # identical docs
     assert all(pruned[d] >= base[d] for d in base)     # pruning ↑ NLL
@@ -715,7 +713,6 @@ def test_ccnet_buckets_match_rank_rule(spark):
         .repartition(5)
     out = {r.doc_id: r.ppl_bucket
            for r in lm_ops.ccnet_buckets(df, "avg_nll", "doc_id").collect()}
-    lm_ops.unpersist_lm()
     ordered = sorted((v, i) for i, v in rows)
     n = len(rows)
     want = {}
@@ -735,7 +732,6 @@ def test_ccnet_buckets_tiny_corpus_degenerates_to_tail(spark):
                                "doc_id long, avg_nll double")
     out = {r.doc_id: r.ppl_bucket
            for r in lm_ops.ccnet_buckets(df, "avg_nll", "doc_id").collect()}
-    lm_ops.unpersist_lm()
     # n=2: k1=0 (head empty), k2=1 → middle={min pair}, tail=rest
     assert out == {2: "middle", 1: "tail"}
 
@@ -756,7 +752,6 @@ def test_ccnet_buckets_partition_layout_invariant(spark):
     got_b = {r.doc_id: r.ppl_bucket
              for r in lm_ops.ccnet_buckets(b, "avg_nll", "doc_id")
              .collect()}
-    lm_ops.unpersist_lm()
     assert got_a == got_b
 
 
