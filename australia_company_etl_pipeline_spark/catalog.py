@@ -65,12 +65,13 @@ _ROWS_CACHE: dict[tuple[str, int, int], list] = {}
 
 # Hard bound on what counts as a "parameter table" (r12, closing the
 # r11 verdict's item 7: the contract was docstring-only, and one misuse
-# pins a corpus in driver memory). 4096 rows is ~16x the largest real
-# meta block (centroid tables at n_centroids <= 256) and far below any
-# corpus. Enforced through a LIMIT read, so an oversized table fails
-# after transferring at most bound+1 rows — never after collecting the
-# whole corpus into the driver first.
-META_ROWS_MAX = 4096
+# pins a corpus in driver memory). The largest table read through here
+# is a PQ codebook, m·n_codes rows: 65536 rows covers 8-bit codes
+# (n_codes=256) at up to 256 subspaces, and stays far below any corpus.
+# Enforced through a LIMIT read, so an oversized table fails after
+# transferring at most bound+1 rows — never after collecting the whole
+# corpus into the driver first.
+META_ROWS_MAX = 65536
 
 
 def read_meta_rows(spark: SparkSession, path: str) -> list:

@@ -15,7 +15,10 @@ Three tiers:
   baseline (O(n²)) that the oracle gate checks.
 
 All cosine math is native (`zip_with` dot product folded with `aggregate`)
-in double precision — no Python, no UDF.
+in double precision — no Python, no UDF. Candidate generation is what
+varies by method; every top-k here (and in ``pq``) ends in the one
+``_topk`` tail: rounded cosine, ``row_number`` per query ordered by
+(cosine desc, id asc), keep rank <= k.
 """
 
 from __future__ import annotations
@@ -68,20 +71,57 @@ def _best_centroid(sim: Column) -> Column:
         F.col("centroid_id").alias("cid"))).alias("b")
 
 
+def _topk(df: DataFrame, k: int, query_id_col: str, id_col: str,
+          vec_col: str | None = None,
+          query_vec_col: str | None = None) -> DataFrame:
+    """The shared exact top-k tail → ``(query_id, id, cosine_sim,
+    rank)``: per query, ``row_number`` over (cosine_sim desc, id asc)
+    and keep rank <= k — ties break to the lowest id. ``df`` already
+    carries ``cosine_sim``, unless ``vec_col``/``query_vec_col`` are
+    given: then ``df`` holds (query, vector) pairs and the score is
+    projected here as the exact cosine rounded to the 1e-6 grid."""
+    if vec_col is not None:
+        df = df.select(
+            F.col(query_id_col), F.col(id_col),
+            F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
+            .alias("cosine_sim"))
+    win = Window.partitionBy(query_id_col).orderBy(
+        F.desc("cosine_sim"), F.asc(id_col))
+    return (df.withColumn("rank", F.row_number().over(win))
+            .filter(F.col("rank") <= k))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      query_id_col: str = "query_id",
                      query_vec_col: str = "query_vec") -> DataFrame:
     """Exact cosine top-k per query. Queries are broadcast (small side)."""
-    pairs = corpus.crossJoin(F.broadcast(queries))
-    scored = pairs.select(
-        F.col(query_id_col), F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-        .alias("cosine_sim"))
-    win = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k))
+    return _topk(corpus.crossJoin(F.broadcast(queries)), k, query_id_col,
+                 id_col, vec_col, query_vec_col)
+
+
+def _refine_topk(approx_corpus: DataFrame, approx_queries: DataFrame,
+                 corpus: DataFrame, queries: DataFrame, k: int,
+                 oversample: int, id_col: str, vec_col: str,
+                 query_id_col: str, query_vec_col: str) -> DataFrame:
+    """Two-stage search shared by ``rp_topk`` and ``sq8_topk``: rank
+    the approximate vectors (same column names as the originals), keep
+    ``k·oversample`` candidate ids per query, join them back to the
+    ORIGINAL corpus vectors and the broadcast queries, and take the
+    exact-cosine top-k. Original floats are read per candidate only."""
+    if oversample < 1:
+        raise ValueError(f"oversample must be >= 1, got {oversample}")
+    cand = brute_force_topk(
+        approx_corpus, approx_queries, k=k * oversample, id_col=id_col,
+        vec_col=vec_col, query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
+    ).select(query_id_col, id_col)
+    pairs = (cand
+             .join(corpus.select(F.col(id_col), F.col(vec_col)), id_col)
+             .join(F.broadcast(queries.select(F.col(query_id_col),
+                                              F.col(query_vec_col))),
+                   query_id_col))
+    return _topk(pairs, k, query_id_col, id_col, vec_col, query_vec_col)
 
 
 def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -153,31 +193,15 @@ def rp_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     row. Recall grows with ``oversample`` and ``out_dim`` — the knob
     trade every two-stage ANN shares; exact rerank means any true
     neighbor that survives stage 1 lands in the final top-k."""
-    if oversample < 1:
-        raise ValueError(f"oversample must be >= 1, got {oversample}")
     pc = random_projection(corpus, vec_col, dim, out_dim, seed,
                            out_col="__pv")
     pq = random_projection(queries, query_vec_col, dim, out_dim, seed,
                            out_col="__pq")
-    cand = brute_force_topk(
+    return _refine_topk(
         pc.select(F.col(id_col), F.col("__pv").alias(vec_col)),
         pq.select(F.col(query_id_col), F.col("__pq").alias(query_vec_col)),
-        k=k * oversample, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    ).select(query_id_col, id_col)
-    scored = (cand
-              .join(corpus.select(F.col(id_col), F.col(vec_col)), id_col)
-              .join(F.broadcast(queries.select(F.col(query_id_col),
-                                               F.col(query_vec_col))),
-                    query_id_col)
-              .select(F.col(query_id_col), F.col(id_col),
-                      F.round(cosine(F.col(vec_col),
-                                     F.col(query_vec_col)), 6)
-                      .alias("cosine_sim")))
-    win = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"),
-                                                   F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k))
+        corpus, queries, k, oversample, id_col, vec_col, query_id_col,
+        query_vec_col)
 
 
 def sq8_encode(df: DataFrame, vec_col: str = "embedding",
@@ -231,28 +255,10 @@ def sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     SQ8's per-component error is tiny (~0.4%), so a small oversample
     (3× default, vs 10× for the 4×-lossier RP) already recovers
     near-exact rankings."""
-    if oversample < 1:
-        raise ValueError(f"oversample must be >= 1, got {oversample}")
-    enc = sq8_encode(corpus, vec_col)
-    deq = enc.select(F.col(id_col),
-                     sq8_dequantize().alias(vec_col))
-    cand = brute_force_topk(
-        deq, queries, k=k * oversample, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    ).select(query_id_col, id_col)
-    scored = (cand
-              .join(corpus.select(F.col(id_col), F.col(vec_col)), id_col)
-              .join(F.broadcast(queries.select(F.col(query_id_col),
-                                               F.col(query_vec_col))),
-                    query_id_col)
-              .select(F.col(query_id_col), F.col(id_col),
-                      F.round(cosine(F.col(vec_col),
-                                     F.col(query_vec_col)), 6)
-                      .alias("cosine_sim")))
-    win = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"),
-                                                   F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k))
+    deq = sq8_encode(corpus, vec_col).select(
+        F.col(id_col), sq8_dequantize().alias(vec_col))
+    return _refine_topk(deq, queries, corpus, queries, k, oversample,
+                        id_col, vec_col, query_id_col, query_vec_col)
 
 
 def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
@@ -310,15 +316,8 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                                                        n_planes,
                                                        multiprobe))))
          .drop("__qb"))
-    pairs = c.join(F.broadcast(q), "__bucket", "inner")
-    scored = pairs.select(
-        F.col(query_id_col), F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-        .alias("cosine_sim"))
-    win = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k))
+    return _topk(c.join(F.broadcast(q), "__bucket", "inner"), k,
+                 query_id_col, id_col, vec_col, query_vec_col)
 
 
 def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16,
@@ -459,6 +458,23 @@ def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16,
     return cents
 
 
+def _nearest_centroids(queries: DataFrame, centroids: DataFrame,
+                       query_id_col: str, query_vec_col: str,
+                       n_probe: int) -> DataFrame:
+    """The in-plan IVF probe ranking: every query row once per its
+    ``n_probe`` nearest centroids (cosine desc, centroid_id asc) with a
+    ``centroid_id`` column. crossJoin + window — fine for the QUERY
+    side, which is small by definition."""
+    win = Window.partitionBy(query_id_col).orderBy(
+        F.desc("__csim"), F.asc("centroid_id"))
+    return (queries.crossJoin(F.broadcast(centroids))
+            .withColumn("__csim", cosine(F.col(query_vec_col),
+                                         F.col("centroid_vec")))
+            .withColumn("__cr", F.row_number().over(win))
+            .filter(F.col("__cr") <= n_probe)
+            .drop("__csim", "__cr", "centroid_vec"))
+
+
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
              n_centroids: int = 16, n_probe: int = 4,
              kmeans_iter: int = 5, seed: int = 42,
@@ -471,19 +487,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     ``n_probe`` closest lists per query."""
     centroids = kmeans_centroids(corpus, n_centroids, kmeans_iter,
                                  id_col, vec_col, seed, checkpoint)
-
-    def assign_nprobe(df: DataFrame, v: str, key: str,
-                      keep: int) -> DataFrame:
-        # window form — fine for the QUERY side (small by definition)
-        pairs = df.crossJoin(F.broadcast(centroids))
-        win = Window.partitionBy(key).orderBy(
-            F.desc("__csim"), F.asc("centroid_id"))
-        return (pairs
-                .withColumn("__csim", cosine(F.col(v), F.col("centroid_vec")))
-                .withColumn("__cr", F.row_number().over(win))
-                .filter(F.col("__cr") <= keep)
-                .drop("__csim", "__cr", "centroid_vec"))
-
     # CORPUS side: nearest-list assignment via max(struct) partial agg —
     # map-side combine shrinks the shuffle to one row per vector, where
     # a row_number window would shuffle and sort all n×k scored pairs
@@ -494,16 +497,10 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
          .agg(best, F.first(vec_col).alias(vec_col))
          .select(F.col("b.cid").alias("centroid_id"),
                  F.col(id_col), F.col(vec_col)))
-    q = assign_nprobe(queries, query_vec_col, query_id_col, n_probe)
-    pairs = c.join(F.broadcast(q), "centroid_id", "inner")
-    scored = pairs.select(
-        F.col(query_id_col), F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-        .alias("cosine_sim"))
-    win = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k))
+    q = _nearest_centroids(queries, centroids, query_id_col,
+                           query_vec_col, n_probe)
+    return _topk(c.join(F.broadcast(q), "centroid_id", "inner"), k,
+                 query_id_col, id_col, vec_col, query_vec_col)
 
 
 def semdedup(corpus: DataFrame, threshold: float = 0.95,
@@ -869,12 +866,13 @@ def _bounded_probe_collect(probes: DataFrame, key_col: str,
     bounded INDEPENDENT of the query-batch size: a single-stage
     ``limit(max+1)`` projection collect when the probe frame is small
     (1 driver job round — the interactive fast path), else one
-    aggregate row (set/min/max fold on the JVM side)."""
+    aggregate row (set/min/max fold on the JVM side). Both paths drop
+    NULL keys, as ``collect_set`` does."""
     rows = (probes.select(F.col(key_col).alias("__k"),
                           qsize.alias("__qs"))
             .limit(_PROBE_COLLECT_MAX + 1).collect())
     if len(rows) <= _PROBE_COLLECT_MAX:
-        keys = list({r["__k"] for r in rows})
+        keys = list({r["__k"] for r in rows if r["__k"] is not None})
         sizes = [r["__qs"] for r in rows if r["__qs"] is not None]
         return (keys, min(sizes) if sizes else None,
                 max(sizes) if sizes else None)
@@ -882,6 +880,30 @@ def _bounded_probe_collect(probes: DataFrame, key_col: str,
                       F.min(qsize).alias("lo"),
                       F.max(qsize).alias("hi")).collect()[0])
     return list(row["ks"] or []), row["lo"], row["hi"]
+
+
+def _index_probe_topk(spark, table_path: str, key_col: str,
+                      probes: DataFrame, k: int, expected_dim: int | None,
+                      what: str, id_col: str, vec_col: str,
+                      query_id_col: str,
+                      query_vec_col: str) -> DataFrame:
+    """The probe tail shared by ``ivf_index_topk`` and
+    ``lsh_index_topk``: ONE bounded collect of the probed partition
+    keys plus the query batch's min/max vector size (the dim guard
+    rides it — one driver job, not two), then a scan of the
+    ``partitionBy(key_col)`` table filtered with ``isin(probed)`` so
+    Catalyst prunes every unprobed partition directory at planning
+    time, a broadcast join to the probe rows, and the exact top-k."""
+    from ..catalog import read_parquet
+
+    probed, lo, hi = _bounded_probe_collect(
+        probes, key_col, F.size(F.col(query_vec_col)))
+    if lo is not None and expected_dim is not None:
+        _raise_on_dim(expected_dim, lo, hi, what)
+    table = (read_parquet(spark, table_path)
+             .filter(F.col(key_col).isin(probed)))
+    return _topk(table.join(F.broadcast(probes), key_col, "inner"), k,
+                 query_id_col, id_col, vec_col, query_vec_col)
 
 
 def ivf_index_topk(spark, path: str, queries: DataFrame, k: int = 10,
@@ -921,8 +943,6 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int = 10,
     index dim, e.g. from a ``meta/`` block or the keyed-cache params
     that built it) skips the centroid-dim probe; leave it None to read
     the dim from the stored centroids."""
-    from pyspark.sql.window import Window
-
     from ..catalog import read_meta_rows, read_parquet
 
     cpath = f"{path}/centroids"
@@ -942,48 +962,17 @@ def ivf_index_topk(spark, path: str, queries: DataFrame, k: int = 10,
         probes = (queries
                   .select("*", F.explode(F.transform(
                       ranked, lambda s: s["cid"])).alias("centroid_id")))
-        qsize = F.size(F.col(query_vec_col))
-        probed, lo, hi = _bounded_probe_collect(probes, "centroid_id",
-                                                qsize)
-        if lo is not None and expected_dim is not None:
-            _raise_on_dim(expected_dim, lo, hi, "query vector")
     else:
         centroids = read_parquet(spark, cpath)
         if expected_dim is None:
             crow = centroids.select(F.size("centroid_vec").alias("d")) \
                 .limit(1).collect()
             expected_dim = crow[0]["d"] if crow else None
-        pairs = queries.crossJoin(F.broadcast(centroids))
-        win = Window.partitionBy(query_id_col).orderBy(
-            F.desc("__csim"), F.asc("centroid_id"))
-        probes = (pairs
-                  .withColumn("__csim", cosine(F.col(query_vec_col),
-                                               F.col("centroid_vec")))
-                  .withColumn("__cr", F.row_number().over(win))
-                  .filter(F.col("__cr") <= n_probe)
-                  .drop("__csim", "__cr", "centroid_vec"))
-        # ONE bounded collect: the probed list ids (the sanctioned
-        # K-value collect) + the query batch's min/max vector size for
-        # the dim guard
-        qsize = F.size(F.col(query_vec_col))
-        prow = probes.agg(F.collect_set("centroid_id").alias("ids"),
-                          F.min(qsize).alias("lo"),
-                          F.max(qsize).alias("hi")).collect()[0]
-        probed = list(prow["ids"] or [])
-        if prow["lo"] is not None and expected_dim is not None:
-            _raise_on_dim(expected_dim, prow["lo"], prow["hi"],
-                          "query vector")
-    lists = (read_parquet(spark, f"{path}/lists")
-             .filter(F.col("centroid_id").isin(probed)))
-    cands = lists.join(F.broadcast(probes), "centroid_id", "inner")
-    scored = cands.select(
-        F.col(query_id_col), F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-        .alias("cosine_sim"))
-    topw = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(topw))
-            .filter(F.col("rank") <= k))
+        probes = _nearest_centroids(queries, centroids, query_id_col,
+                                    query_vec_col, n_probe)
+    return _index_probe_topk(spark, f"{path}/lists", "centroid_id",
+                             probes, k, expected_dim, "query vector",
+                             id_col, vec_col, query_id_col, query_vec_col)
 
 
 def build_lsh_index(corpus: DataFrame, path: str, n_planes: int = 4,
@@ -1048,7 +1037,7 @@ def lsh_index_topk(spark, path: str, queries: DataFrame, k: int = 10,
     the check rides the probe collect (one driver job, not two), and
     the one-row ``meta/`` parameter read is served from the metadata
     cache (r11)."""
-    from ..catalog import read_meta_rows, read_parquet
+    from ..catalog import read_meta_rows
 
     meta = read_meta_rows(spark, f"{path}/meta")[0]
     n_planes, dim, seed = meta["n_planes"], meta["dim"], meta["seed"]
@@ -1059,28 +1048,10 @@ def lsh_index_topk(spark, path: str, queries: DataFrame, k: int = 10,
         "bucket", F.explode(F.array(*_probe_masks(F.col("__qb"),
                                                   n_planes, multiprobe))))
         .drop("__qb"))
-    # collect the probe PROJECTION in one stage (r11): set/min/max fold
-    # driver-side without the collect_set aggregate's extra exchange +
-    # AQE job round. r12 (advice): the transfer is additionally bounded
-    # at _PROBE_COLLECT_MAX rows — a large query batch falls back to
-    # the one-row aggregate instead of shipping n_queries × probes rows
-    # through py4j.
-    qsize = F.size(F.col(query_vec_col))
-    probed, lo, hi = _bounded_probe_collect(probes, "bucket", qsize)
-    if lo is not None:
-        _raise_on_dim(dim, lo, hi,
-                      "query vector (vs stored LSH plane family)")
-    buckets = (read_parquet(spark, f"{path}/buckets")
-               .filter(F.col("bucket").isin(probed)))
-    cands = buckets.join(F.broadcast(probes), "bucket", "inner")
-    scored = cands.select(
-        F.col(query_id_col), F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-        .alias("cosine_sim"))
-    win = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k))
+    return _index_probe_topk(
+        spark, f"{path}/buckets", "bucket", probes, k, dim,
+        "query vector (vs stored LSH plane family)",
+        id_col, vec_col, query_id_col, query_vec_col)
 
 
 def embedding_dup_pairs_lsh(corpus: DataFrame, threshold: float = 0.99,

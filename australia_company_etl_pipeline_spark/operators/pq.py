@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .ann import _best_centroid, _dbl, dot
+from .ann import _best_centroid, _dbl, _topk, dot
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -331,11 +331,8 @@ def pq_topk(codes_df: DataFrame, queries: DataFrame,
               .select(F.col(query_id_col), F.col(id_col),
                       F.round(adc / (F.col("__qn") * F.col("pq_norm")), 6)
                       .alias("cosine_sim")))
-    win = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc(id_col))
     first_k = k * oversample if rerank_df is not None else k
-    top = (scored.withColumn("rank", F.row_number().over(win))
-           .filter(F.col("rank") <= first_k))
+    top = _topk(scored, first_k, query_id_col, id_col)
     if rerank_df is None:
         return top
     from .ann import cosine
@@ -357,5 +354,4 @@ def pq_topk(codes_df: DataFrame, queries: DataFrame,
                      F.coalesce(
                          F.round(cosine(F.col("__cv"), F.col("__qv")), 6),
                          F.col("__adc")).alias("cosine_sim")))
-    return (exact.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k))
+    return _topk(exact, k, query_id_col, id_col)

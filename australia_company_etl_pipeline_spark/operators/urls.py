@@ -6,9 +6,9 @@ pass: the same page is fetched under dozens of surface forms
 (`HTTP://WWW.Example.com:80/a//b/?utm_source=x#top` is
 `http://example.com/a/b`), and a handful of boilerplate-heavy hosts
 otherwise dominate the corpus. This module provides that layer as pure
-native ``Column`` expressions — no UDF, fully whole-stage-codegen, and
-every regex is RE2-safe (no backreferences / lookaround) so the DuckDB
-oracle replays the exact same canonicalization.
+native SQL expressions — no UDF, fully whole-stage-codegen, and every
+regex is RE2-safe (no backreferences / lookaround) so the DuckDB oracle
+replays the exact same canonicalization.
 
 Extends the reference's URL surface (F3 ``extract_domain`` /
 P8 domain predicate, /root/reference/src/common/utils.py:120-161) from
@@ -71,16 +71,13 @@ _SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"
 
 
 # ---------------------------------------------------------------------------
-# SQL-text twins (r11, guide §5 driver latency): the Column-tree forms
-# below build O(dozens) Column objects per call — one py4j round trip
-# each — and the url branch of corpus_filter_stats pays ~2,500 round
-# trips per build. When the caller knows its input as a COLUMN NAME
-# (every internal call site does), the whole canonicalization renders
-# as ONE SQL string and parses in ONE round trip. The templates are
-# 1:1 transcriptions of the Column builders — same operators, same
-# regexes, same CASE structure — so the parsed tree is semantically
-# identical (value-pinned by the corpus_filter_stats oracle and the
-# A/B test in tests/test_urls.py).
+# SQL templates: every key function takes its input as a COLUMN NAME and
+# renders the whole canonicalization as ONE SQL string, which parses in
+# ONE py4j round trip — an equivalent Column tree costs one round trip
+# per node (~2,500 for the url branch of corpus_filter_stats). Values
+# are pinned against the Python twin of the contract in
+# tests/test_urls.py and against the DuckDB oracle (plans/text.py
+# _URL_SQL) through the corpus_filter_stats url folds.
 # ---------------------------------------------------------------------------
 
 def _sq(s: str) -> str:
@@ -93,7 +90,7 @@ def _qcol(name: str) -> str:
     """Backtick-quoted column reference with ``F.col``'s dotted-name
     semantics: each dot-separated segment quotes separately, so a
     caller passing ``"meta.url"`` gets nested-struct field access
-    (``\\`meta\\`.\\`url\\```) exactly as the Column form resolved it —
+    (``\\`meta\\`.\\`url\\```) exactly as ``F.col`` resolves it —
     whole-name quoting would instead demand a top-level column
     literally named ``meta.url`` (r12, closing the r11 advice)."""
     return ".".join("`" + seg.replace("`", "``") + "`"
@@ -172,117 +169,50 @@ def _registrable_domain_sql(e: str) -> str:
             f"ELSE concat_ws('.', {second}, {last}) END")
 
 
-def _parts(url: Column) -> dict[str, Column]:
-    """Split into scheme / authority / path / query (fragment dropped)."""
-    u = F.coalesce(url, F.lit(""))
-    u = F.when(u == "", u).otherwise(
-        F.when(u.rlike(_SCHEME_RE), u)
-        .otherwise(F.concat(F.lit("http://"), u)))
-    rest = F.regexp_replace(u, _SCHEME_RE, "")
-    authority = F.regexp_extract(rest, r"^([^/?#]*)", 1)
-    tail = F.regexp_replace(rest, r"^[^/?#]*", "")
-    return {
-        "scheme": F.lower(
-            F.regexp_extract(u, r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://", 1)),
-        "authority": authority,
-        "path": F.regexp_extract(tail, r"^([^?#]*)", 1),
-        "query": F.regexp_extract(tail, r"^[^?#]*\?([^#]*)", 1),
-    }
+def _host(url: str, strip_www: bool) -> Column:
+    return F.expr(_host_of_sql(_parts_sql(_qcol(url))["authority"],
+                               strip_www))
 
 
-def _host_of(authority: Column, strip_www: bool) -> Column:
-    host = F.lower(F.regexp_replace(authority, r":[0-9]*$", ""))
-    host = F.regexp_replace(host, r"\.$", "")
-    if strip_www:
-        host = F.regexp_replace(host, r"^www\.", "")
-    return host
-
-
-def _canonical(url: Column, *, strip_www: bool, with_scheme: bool,
-               tracking_re: str, sort_params: bool) -> Column:
-    p = _parts(url)
-    host = _host_of(p["authority"], strip_www)
-    port = F.regexp_extract(p["authority"], r":([0-9]+)$", 1)
-    default_port = (((p["scheme"] == "http") & (port == "80"))
-                    | ((p["scheme"] == "https") & (port == "443")))
-    portpart = F.when((port == "") | default_port, F.lit("")) \
-                .otherwise(F.concat(F.lit(":"), port))
-    path = F.regexp_replace(p["path"], r"/{2,}", "/")
-    path = F.regexp_replace(path, r"/+$", "")
-    params = F.filter(F.split(p["query"], "&"),
-                      lambda q: (q != "") & ~q.rlike(tracking_re))
-    if sort_params:
-        params = F.array_sort(params)
-    qs = F.array_join(params, "&")
-    qspart = F.when(qs == "", qs).otherwise(F.concat(F.lit("?"), qs))
-    prefix = (F.concat(p["scheme"], F.lit("://")) if with_scheme
-              else F.lit(""))
-    return F.when(host == "", F.lit("")).otherwise(
-        F.concat(prefix, host, portpart, path, qspart))
-
-
-def canonicalize_url(url: Column | str, *, strip_www: bool = False,
+def canonicalize_url(url: str, *, strip_www: bool = False,
                      tracking_re: str = TRACKING_PARAM_RE,
                      sort_params: bool = True) -> Column:
-    """Full canonical URL string per the module contract ('' = bad).
-    ``url`` may be a Column or a COLUMN NAME — the name form renders
-    the whole chain as one parsed SQL expression (r11 driver-latency
-    fast path; identical semantics)."""
-    if isinstance(url, str):
-        return F.expr(_canonical_sql(
-            _qcol(url), strip_www=strip_www, with_scheme=True,
-            tracking_re=tracking_re, sort_params=sort_params))
-    return _canonical(url, strip_www=strip_www, with_scheme=True,
-                      tracking_re=tracking_re, sort_params=sort_params)
+    """Full canonical URL string per the module contract ('' = bad) of
+    the column named ``url`` (dotted names reach nested struct fields,
+    as ``F.col`` resolves them)."""
+    return F.expr(_canonical_sql(
+        _qcol(url), strip_www=strip_www, with_scheme=True,
+        tracking_re=tracking_re, sort_params=sort_params))
 
 
-def url_key(url: Column | str) -> Column:
+def url_key(url: str) -> Column:
     """Dedup key: canonical form minus scheme, ``www.`` stripped — the
     form under which http/https and www/bare fetches of one page
     collide. '' = unparseable (callers should quarantine, not dedup,
-    the '' group). Column or column name (see ``canonicalize_url``)."""
-    if isinstance(url, str):
-        return F.expr(_canonical_sql(
-            _qcol(url), strip_www=True, with_scheme=False,
-            tracking_re=TRACKING_PARAM_RE, sort_params=True))
-    return _canonical(url, strip_www=True, with_scheme=False,
-                      tracking_re=TRACKING_PARAM_RE, sort_params=True)
+    the '' group). ``url`` is a column name (see ``canonicalize_url``)."""
+    return F.expr(_canonical_sql(
+        _qcol(url), strip_www=True, with_scheme=False,
+        tracking_re=TRACKING_PARAM_RE, sort_params=True))
 
 
-def host_key(url: Column | str) -> Column:
+def host_key(url: str) -> Column:
     """Full lowercase host of a URL ('' = no host): port stripped,
     trailing dot dropped, ``www.`` KEPT (subdomains are signal — this
     is the key host-granularity PageRank and authority-weighted
     shaping rank on, where ``registrable_domain`` would collapse
     blog.example.com and spam.example.com into one node). Accepts full
-    URLs or bare hosts (scheme defaulted). Column or column name (see
-    ``canonicalize_url``)."""
-    if isinstance(url, str):
-        return F.expr(_host_of_sql(_parts_sql(_qcol(url))["authority"],
-                                   strip_www=False))
-    return _host_of(_parts(url)["authority"], strip_www=False)
+    URLs or bare hosts (scheme defaulted). ``url`` is a column name
+    (see ``canonicalize_url``)."""
+    return _host(url, strip_www=False)
 
 
-def registrable_domain(url: Column | str) -> Column:
+def registrable_domain(url: str) -> Column:
     """Heuristic registrable domain ('' = no host): last two labels of
     the host, or last three when the TLD is ≤3 chars and the
     second-level label is in ``SECOND_LEVEL_LABELS`` (example.com.au).
-    Accepts full URLs or bare hosts (scheme defaulted). Column or
+    Accepts full URLs or bare hosts (scheme defaulted). ``url`` is a
     column name (see ``canonicalize_url``)."""
-    if isinstance(url, str):
-        return F.expr(_registrable_domain_sql(_qcol(url)))
-    host = _host_of(_parts(url)["authority"], strip_www=False)
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    last = F.element_at(labels, -1)
-    second = F.element_at(labels, -2)
-    suffix3 = ((n >= 3) & (F.length(last) <= 3)
-               & second.isin(*SECOND_LEVEL_LABELS))
-    return (F.when(host == "", F.lit(""))
-            .when(n <= 2, host)
-            .when(suffix3, F.concat_ws(".", F.element_at(labels, -3),
-                                       second, last))
-            .otherwise(F.concat_ws(".", second, last)))
+    return F.expr(_registrable_domain_sql(_qcol(url)))
 
 
 def url_dedup(df: DataFrame, url_col: str, id_col: str) -> DataFrame:
@@ -295,8 +225,7 @@ def url_dedup(df: DataFrame, url_col: str, id_col: str) -> DataFrame:
     skew-safe — the same shape line_dedup mode='first' uses) + a semi
     join back on (key, id). No window, no row funnel.
     """
-    key = url_key(url_col)  # name form: one parsed expression
-    tagged = df.withColumn("__uk", key)
+    tagged = df.withColumn("__uk", url_key(url_col))
     firsts = (tagged.filter(F.col("__uk") != "")
               .groupBy("__uk").agg(F.min(id_col).alias(id_col)))
     kept = tagged.join(firsts, ["__uk", id_col], "leftsemi")
@@ -385,24 +314,19 @@ def filter_blocked_domains(df: DataFrame, url_col: str, blocked,
     (key='') are NEVER dropped by the blocklist — '' is "unknown", and
     a blocklist entry cannot mean "unknown".
     """
-    spark = df.sparkSession
-    if not isinstance(blocked, DataFrame):
-        blocked = spark.createDataFrame([(b,) for b in blocked],
-                                        "b string")
-    bcol = blocked.columns[0]
-    if mode == "domain":
-        key = registrable_domain(url_col)
-        bkey = registrable_domain(bcol)
-    elif mode == "host":
-        key = F.expr(_host_of_sql(_parts_sql(_qcol(url_col))["authority"],
-                                  strip_www=True))
-        bkey = F.expr(_host_of_sql(_parts_sql(_qcol(bcol))["authority"],
-                                   strip_www=True))
-    else:
+    if mode not in ("domain", "host"):
         raise ValueError(f"mode must be 'domain' or 'host', got {mode!r}")
-    blk = (blocked.select(bkey.alias("__blk")).where(F.col("__blk") != "")
-           .distinct())
-    tagged = df.withColumn("__key", key)
+    if not isinstance(blocked, DataFrame):
+        blocked = df.sparkSession.createDataFrame(
+            [(b,) for b in blocked], "b string")
+
+    def key(url: str) -> Column:
+        return (registrable_domain(url) if mode == "domain"
+                else _host(url, strip_www=True))
+
+    blk = (blocked.select(key(blocked.columns[0]).alias("__blk"))
+           .where(F.col("__blk") != "").distinct())
+    tagged = df.withColumn("__key", key(url_col))
     kept = (tagged.join(F.broadcast(blk),
                         tagged["__key"] == blk["__blk"], "left_anti")
             .drop("__key"))

@@ -116,12 +116,12 @@ _DEFAULTS = {
     # for a production engine whose queries are library-built; flip it
     # back on (extra_conf) when debugging a plan interactively.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
-    # SQL-text twins (urls.py _sq, the r11 driver-latency fast path)
-    # escape string literals for the DEFAULT parser mode; a session
-    # flipped to the legacy escapedStringLiterals=true would parse the
-    # twin regexes differently and silently diverge from the Column
-    # forms (r11 advice). Pin the default explicitly so a stray
-    # spark-defaults.conf can't flip it under the engine; pinned by
+    # The url SQL templates (urls.py _sq) escape string literals for the
+    # DEFAULT parser mode; a session flipped to the legacy
+    # escapedStringLiterals=true would parse their regexes differently
+    # and silently diverge from the DuckDB oracle's regexes (r11
+    # advice). Pin the default explicitly so a stray spark-defaults.conf
+    # can't flip it under the engine; pinned by
     # tests/test_session_conf.py.
     "spark.sql.parser.escapedStringLiterals": "false",
 }

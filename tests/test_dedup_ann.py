@@ -1480,6 +1480,36 @@ def test_containment_excludes_sub_shingle_benchmark_rows(spark):
                              on_short="loud")
 
 
+def test_containment_benchmark_shingles_side_matches_raw_text(spark):
+    """containment_pairs keeps two benchmark sides — shingled from raw
+    text here, or passed in as ``benchmark_shingles`` — and both must
+    give identical pairs on the hostile rows: empty, NULL, 1-token,
+    2-token, whitespace-only and whitespace-run benchmark docs."""
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"),
+         (2, "Alpha  beta\tgamma and more words"),
+         (3, "one two"),
+         (4, ""),
+         (5, None),
+         (6, "zeta eta theta iota kappa")],
+        "doc_id long, text string")
+    bench = spark.createDataFrame(
+        [(900, ""), (901, None), (902, "alpha"), (903, "alpha beta"),
+         (904, "   "), (905, "  alpha   beta \t gamma  "),
+         (906, "eta theta iota"), (907, "one two")],
+        "doc_id long, text string")
+    bsh = dd.shingle_frame(bench, "text", "doc_id", 3, persist=False)
+
+    def pairs(**kw):
+        return sorted(map(tuple, dd.containment_pairs(
+            corpus, bench, "text", "doc_id", threshold=0.0, shingle=3,
+            **kw).collect()))
+
+    raw = pairs()
+    assert raw == pairs(benchmark_shingles=bsh)
+    assert raw == [(1, 905, 1.0), (2, 905, 1.0), (6, 906, 1.0)]
+
+
 def test_duplicate_rate_estimate(spark):
     """The planning sketch: ~0 on all-distinct data, ≈ the true rate on
     heavily duplicated data (HLL at rsd=0.02), clamped non-negative,
@@ -1740,8 +1770,7 @@ def test_incremental_exact_dedup_column_expression_key(spark, tmp_path):
             (2, "https://page.net/a/"),
             (3, "http://other.net/b")]
     df = spark.createDataFrame(rows, "doc_id long, url string")
-    out = dd.incremental_exact_dedup(df, idx, U.url_key(F.col("url")),
-                                     "doc_id")
+    out = dd.incremental_exact_dedup(df, idx, U.url_key("url"), "doc_id")
     assert sorted(r.doc_id for r in out.collect()) == [1, 3]
 
 
@@ -2128,15 +2157,16 @@ def test_bounded_probe_collect_agg_fallback_matches(spark, sf_dir,
     _PROBE_COLLECT_MAX rows through py4j; above that it falls back to
     one collect_set/min/max aggregate row. Both paths must return the
     same (probed keys, min, max) — pinned directly on the helper and
-    end-to-end on ivf_index_topk with the fallback forced."""
+    end-to-end on ivf_index_topk with the fallback forced. A NULL key
+    is dropped on both paths (collect_set drops it)."""
     df = spark.createDataFrame(
-        [(i % 7, float(i % 3) + 1.0) for i in range(50)],
+        [(i % 7, float(i % 3) + 1.0) for i in range(50)] + [(None, 2.0)],
         "k int, qs double")
     qsize = F.col("qs")
     fast = ann._bounded_probe_collect(df, "k", qsize)
     old_max = ann._PROBE_COLLECT_MAX
     try:
-        ann._PROBE_COLLECT_MAX = 10  # 50 rows > 10 -> aggregate path
+        ann._PROBE_COLLECT_MAX = 10  # 51 rows > 10 -> aggregate path
         slow = ann._bounded_probe_collect(df, "k", qsize)
     finally:
         ann._PROBE_COLLECT_MAX = old_max

@@ -565,9 +565,8 @@ def test_canonicalize_url_is_pure_projection(spark, sf_dir):
     d = table(spark, sf_dir, "documents").select(
         "doc_id", F.concat(F.lit("http://h.com/"),
                            F.col("doc_id").cast("string")).alias("url"))
-    plan = _plan(d.select(U.canonicalize_url(F.col("url")),
-                          U.url_key(F.col("url")),
-                          U.registrable_domain(F.col("url"))))
+    plan = _plan(d.select(U.canonicalize_url("url"), U.url_key("url"),
+                          U.registrable_domain("url")))
     assert "Exchange" not in plan, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # formatted mode marks codegen stages with '*'; the higher-order

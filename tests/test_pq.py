@@ -189,6 +189,24 @@ def test_persisted_index_roundtrip(spark, corpus, tmp_path):
     assert residue == []
 
 
+def test_load_8bit_codebook_above_4096_rows(spark, tmp_path):
+    """Standard 8-bit PQ (m=32 subspaces × n_codes=256) stores 8192
+    codebook rows; loading it must not trip the parameter-table bound
+    of read_meta_rows."""
+    path = str(tmp_path / "pq8")
+    (spark.range(32 * 256)
+     .selectExpr("CAST(id DIV 256 AS INT) AS subspace",
+                 "CAST(id % 256 AS INT) AS code",
+                 "array(CAST(id AS DOUBLE), -CAST(id AS DOUBLE)) "
+                 "AS centroid_vec")
+     .coalesce(1).write.parquet(f"{path}/codebook"))
+    books = pq.load_pq_codebook(spark, path)
+    assert len(books) == 32 and all(len(b) == 256 for b in books)
+    assert books[31][255] == [8191.0, -8191.0]
+    assert all(books[j][c] == [float(j * 256 + c), -float(j * 256 + c)]
+               for j in range(32) for c in range(256))
+
+
 def test_tiny_corpus_fails_loudly(spark):
     df = spark.createDataFrame([(i, [float(i)] * 8) for i in range(3)],
                                "vec_id long, embedding array<double>")

@@ -51,10 +51,10 @@ def test_live_session_carries_code_cache_conf(spark):
 
 
 def test_escaped_string_literals_pinned_default():
-    # The SQL-text twins (urls.py _sq) escape string literals for the
-    # DEFAULT parser mode; a session flipped to the legacy
-    # escapedStringLiterals=true would parse the twin regexes
-    # differently and silently diverge from the Column forms (r11
+    # The url SQL templates (urls.py _sq) escape string literals for
+    # the DEFAULT parser mode; a session flipped to the legacy
+    # escapedStringLiterals=true would parse their regexes differently
+    # and silently diverge from the DuckDB oracle's regexes (r11
     # advice). The default is pinned explicitly so a stray
     # spark-defaults.conf can't flip it under the engine.
     assert _DEFAULTS["spark.sql.parser.escapedStringLiterals"] == "false"

@@ -20,7 +20,7 @@ from australia_company_etl_pipeline_spark.operators import urls as U
 
 def _canon(spark, values, **kw):
     df = spark.createDataFrame([(v,) for v in values], "url string")
-    out = df.select(U.canonicalize_url(F.col("url"), **kw).alias("c"))
+    out = df.select(U.canonicalize_url("url", **kw).alias("c"))
     return [r.c for r in out.collect()]
 
 
@@ -66,7 +66,7 @@ def test_url_key_merges_scheme_and_www(spark):
     ]
     df = spark.createDataFrame([(v,) for v in variants], "url string")
     keys = {r.k for r in
-            df.select(U.url_key(F.col("url")).alias("k")).collect()}
+            df.select(U.url_key("url").alias("k")).collect()}
     assert keys == {"page.net/art?id=3"}
 
 
@@ -82,8 +82,7 @@ def test_url_key_merges_scheme_and_www(spark):
 ])
 def test_registrable_domain(spark, host, want):
     df = spark.createDataFrame([(host,)], "h string")
-    got = df.select(
-        U.registrable_domain(F.col("h")).alias("d")).collect()[0].d
+    got = df.select(U.registrable_domain("h").alias("d")).collect()[0].d
     assert got == want
 
 
@@ -127,6 +126,18 @@ def _py_canonical(url, strip_www=False, with_scheme=True):
     return out
 
 
+# hostile extras beyond the fuzz grammar: odd and doubled ports, empty
+# params, weird schemes, doubled '?', host-less and scheme-less forms
+HOSTILE = [
+    "https://sub.blog.example.co:8443//a///b//?z=9&utm_campaign&y=2#f",
+    "http://:80/nohost", "scheme://h.gov.au/p?a=%41&b=a",
+    "HtTpS://WWW.x.Y.asn.AU/p?utm_x=1&gclid=2", "just text",
+    "http://host/?&&", "http://host/??a=1", "http://h/p#a?b=1",
+    "http://h:8080:9090/p", "http://h/p?a=1&a=1&A=1", "//weird",
+    "www.foo.NET/path//", "ftp://Host.Org:21/p?q=1",
+]
+
+
 def test_canonicalize_fuzz_vs_python_twin(spark):
     rng = random.Random(7)
     schemes = ["http://", "https://", "HTTP://", "FTP://", ""]
@@ -139,10 +150,16 @@ def test_canonicalize_fuzz_vs_python_twin(spark):
     frags = ["", "#f", "#a?b=1"]
     cases = ["".join(rng.choice(x) for x in
                      (schemes, hosts, ports, paths, queries, frags))
-             for _ in range(300)]
+             for _ in range(300)] + HOSTILE
     got = _canon(spark, cases)
     for src, out in zip(cases, got):
         assert out == _py_canonical(src), f"diverged on {src!r}"
+    df = spark.createDataFrame([(c,) for c in cases], "url string")
+    keys = [r.k for r in df.select(U.url_key("url").alias("k")).collect()]
+    for src, key in zip(cases, keys):
+        assert key == _py_canonical(src, strip_www=True,
+                                    with_scheme=False), \
+            f"url_key diverged on {src!r}"
 
 
 # ---------------------------------------------------------------------------
@@ -236,55 +253,21 @@ def test_filter_blocked_domains_plan_broadcasts(spark):
     assert "Broadcast" in buf.getvalue()
 
 
-def test_sql_text_twins_match_column_forms(spark):
-    """The r11 driver-latency fast path (column-NAME inputs render the
-    whole chain as one parsed SQL expression) must be value-identical
-    to the Column-tree forms for every key function, over the golden
-    cases plus hostile extras (ports, empty params, weird schemes)."""
-    cases = [g[0] for g in GOLDENS] + [
-        "https://sub.blog.example.co:8443//a///b//?z=9&utm_campaign&y=2#f",
-        "http://:80/nohost", "scheme://h.gov.au/p?a=%41&b=a",
-        "HtTpS://WWW.x.Y.asn.AU/p?utm_x=1&gclid=2", "just text",
-        "http://host/?&&", "http://host/??a=1", "http://h/p#a?b=1",
-        "http://h:8080:9090/p", "http://h/p?a=1&a=1&A=1", "//weird",
-        "www.foo.NET/path//", "ftp://Host.Org:21/p?q=1",
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "url string")
-    pairs = [
-        ("canon", U.canonicalize_url(F.col("url")),
-         U.canonicalize_url("url")),
-        ("ukey", U.url_key(F.col("url")), U.url_key("url")),
-        ("hkey", U.host_key(F.col("url")), U.host_key("url")),
-        ("rdom", U.registrable_domain(F.col("url")),
-         U.registrable_domain("url")),
-    ]
-    sel = df.select("url", *[old.alias(f"{n}_o") for n, old, _ in pairs],
-                    *[new.alias(f"{n}_n") for n, _, new in pairs])
-    for r in sel.collect():
-        for n, _, _ in pairs:
-            assert r[f"{n}_o"] == r[f"{n}_n"], (
-                n, r["url"], r[f"{n}_o"], r[f"{n}_n"])
-
-
 def test_name_form_resolves_nested_struct_fields(spark):
     """_qcol quotes dot-separated segments individually (r12, advice):
-    a caller passing "meta.url" through the name-form fast path gets
-    nested-struct field access exactly as F.col("meta.url") resolves
-    it — whole-name backtick quoting would instead demand a top-level
-    column literally named "meta.url" and raise."""
+    a caller passing "meta.url" gets nested-struct field access exactly
+    as F.col("meta.url") resolves it — whole-name backtick quoting
+    would instead demand a top-level column literally named "meta.url"
+    and raise."""
     df = spark.createDataFrame(
         [("x", ("HTTP://WWW.Example.com:80/a//b/?utm_source=x&b=2&a=1",))],
         "id string, meta struct<url: string>")
     out = df.select(
         U.canonicalize_url("meta.url").alias("cn"),
-        U.canonicalize_url(F.col("meta.url")).alias("co"),
         U.url_key("meta.url").alias("kn"),
-        U.url_key(F.col("meta.url")).alias("ko"),
         U.host_key("meta.url").alias("hn"),
-        U.host_key(F.col("meta.url")).alias("ho"),
-        U.registrable_domain("meta.url").alias("rn"),
-        U.registrable_domain(F.col("meta.url")).alias("ro"))
+        U.registrable_domain("meta.url").alias("rn"))
     r = out.collect()[0]
-    assert r["cn"] == r["co"] == "http://www.example.com/a/b?a=1&b=2"
-    assert r["kn"] == r["ko"]
-    assert r["hn"] == r["ho"] and r["rn"] == r["ro"] == "example.com"
+    assert r["cn"] == "http://www.example.com/a/b?a=1&b=2"
+    assert r["kn"] == "example.com/a/b?a=1&b=2"
+    assert r["hn"] == "www.example.com" and r["rn"] == "example.com"
